@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): one JSON line with per-query
   * steady-state seconds over SPARK_GRAFT_SF_DIR.
@@ -28,6 +29,76 @@ object Bench {
     "q_tpch_q1" -> 1.436,
     "q_dedup_minhash" -> 0.686,
     "q_window_rank" -> 0.513)
+
+  type Builder = (SparkSession, String) => DataFrame
+
+  /** Per key: min across three INTERLEAVED passes over all
+    * `builders`. The host VM stalls entire-JVM execution for tens of
+    * seconds at unpredictable points; back-to-back repeats of one query
+    * let a single stall poison every sample of that query (observed in
+    * BENCH_r02: 26 s recorded for a 1.2 s steady-state plan), whereas a
+    * time-localized stall hits DIFFERENT queries in each interleaved
+    * pass, so the per-query min strips it.
+    *
+    * A key that throws in ANY pass gets no time — the time to a throw
+    * would benchmark a broken key as a fast one — and is returned in
+    * the second map with its first error instead.
+    */
+  private[graft] def timedPasses(spark: SparkSession, sfDir: String,
+      builders: Seq[(String, Builder)])
+      : (Map[String, Double], Map[String, String]) = {
+    val samples = (1 to 3).flatMap { _ =>
+      // clear between passes: queries persist() intermediates, and the
+      // cache manager matches identical re-constructed plans — without
+      // this, passes 2-3 time warm-cache reads instead of plan cost
+      spark.sharedState.cacheManager.clearCache()
+      builders.map { case (name, fn) =>
+        val t0 = System.nanoTime()
+        // noop sink forces full computation of every output column
+        // (count() would let Catalyst prune the projections being timed)
+        name -> (try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          Left(e.toString.linesIterator.nextOption().getOrElse("").take(500))
+        })
+      }
+    }
+    val byKey = samples.groupMap(_._1)(_._2)
+    val failed = byKey.flatMap { case (k, ss) => ss.collectFirst { case Left(e) => k -> e } }
+    val times = byKey.collect { case (k, ss) if !failed.contains(k) =>
+      k -> ss.collect { case Right(t) => t }.min
+    }
+    (times, failed)
+  }
+
+  /** The JSON line: "queries" FIRST, "failed" next to last, and
+    * "metric"/"value" LAST — a reader that keeps only the tail of
+    * stdout clips a line of 140+ queries, so the headline total must
+    * sit at the end of the line to survive.
+    * Targeted runs (`targeted` non-empty): the controls ride along for
+    * drift interpretation but must NOT inflate the headline total, or
+    * totals become incomparable across runs with different arg sets
+    * (ADVICE r11). A failed key has no time, so it is in no total.
+    */
+  private[graft] def report(sfDir: String, results: Map[String, Double],
+      failed: Map[String, String], targeted: Seq[String]): String = {
+    def q(s: String): String =
+      "\"" + new String(JsonStringEncoder.getInstance().quoteAsString(s)) + "\""
+    val qs = results.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+    val controls = controlKeys.toSeq.sortBy(_._1).flatMap { case (k, rec) =>
+      results.get(k).map(sec =>
+        s"""${q(k)}:{"sec":$sec,"recorded":$rec,"ratio":${sec / rec}}""")
+    }.mkString("{", ",", "}")
+    val fails = failed.toSeq.sorted.map { case (k, e) => s"${q(k)}:${q(e)}" }
+      .mkString("{", ",", "}")
+    val counted =
+      if (targeted.nonEmpty) results.view.filterKeys(targeted.contains).toMap
+      else results
+    val total = counted.values.sum
+    s"""{"queries":$qs,"sf":${q(sfDir)},"controls":$controls,""" +
+      s""""failed":$fails,"metric":"total","unit":"sec","value":$total}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -59,52 +130,9 @@ object Bench {
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    spark.sharedState.cacheManager.clearCache()
-    // Per query: min across three INTERLEAVED passes over the whole
-    // inventory. The host VM stalls entire-JVM execution for tens of
-    // seconds at unpredictable points; back-to-back repeats of one query
-    // let a single stall poison every sample of that query (observed in
-    // BENCH_r02: 26 s recorded for a 1.2 s steady-state plan), whereas a
-    // time-localized stall hits DIFFERENT queries in each interleaved
-    // pass, so the per-query min strips it.
-    val names = keyed.keys.toSeq
-    val samples = (1 to 3).flatMap { pass =>
-      // clear between passes: queries persist() intermediates, and the
-      // cache manager matches identical re-constructed plans — without
-      // this, passes 2-3 time warm-cache reads instead of plan cost
-      spark.sharedState.cacheManager.clearCache()
-      names.map { name =>
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        // noop sink forces full computation of every output column
-        // (count() would let Catalyst prune the projections being timed)
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    }
-    val results = samples.groupBy(_._1).map { case (n, ts) =>
-      n -> ts.map(_._2).min
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val controls = controlKeys.toSeq.sortBy(_._1).flatMap { case (k, rec) =>
-      results.get(k).map(sec =>
-        s""""$k":{"sec":$sec,"recorded":$rec,"ratio":${sec / rec}}""")
-    }.mkString("{", ",", "}")
-    // targeted runs: the controls ride along for drift interpretation
-    // but must NOT inflate the headline total, or totals become
-    // incomparable across runs with different arg sets (ADVICE r11)
-    val counted =
-      if (args.nonEmpty) results.view.filterKeys(args.contains).toMap
-      else results
-    val total = if (counted.nonEmpty) counted.values.sum else 0.0
-    // "queries" FIRST, "metric"/"value" LAST: the driver keeps only the
-    // tail of stdout, and with 140+ queries the line exceeds that buffer —
-    // the headline total must sit at the end of the line to survive.
-    val line =
-      s"""{"queries":$qs,"sf":"$sfDir","controls":$controls,""" +
-        s""""metric":"total","unit":"sec","value":$total}"""
+    val (results, failed) = timedPasses(spark, sfDir, keyed.toSeq)
+    failed.foreach { case (k, e) => System.err.println(s"[bench] $k failed: $e") }
+    val line = report(sfDir, results, failed, args.toSeq)
     println(line)
     // the builder's own complete artifact (VERDICT r10: BENCH_r10.json
     // arrived with a truncated tail, so the judge's per-query audit ran

@@ -105,6 +105,13 @@ object Tables {
     }
   }
 
+  /** [[events]] projected to the event keys with `ts` as epoch-µs
+    * BIGINT `us` (the Det rule: both engines bin and hash the same
+    * integer). */
+  def eventsUs(s: SparkSession, d: String): DataFrame =
+    events(s, d).select(col("event_id"), col("user_id"), col("event_type"),
+      col("value"), unix_micros(col("ts")).as("us"))
+
   /** Declared schema for the Q&A JSONL corpus (the reference pipeline's
     * output shape, app/main.py:107-110): explicit schema-on-read with
     * corrupt-record tolerance instead of inference.

@@ -802,37 +802,46 @@ object DedupQueries {
     * for ExactSubstringSpec, which plants misaligned copies and pins
     * recall 1.0.
     *
-    * SCALE CONTRACT: windows travel as 48-bit BIGINT fingerprints
-    * (md5 prefix — the q_boilerplate / q_distinct_n idiom, identical
-    * in both engines; collision odds ~G²/2⁴⁹ over G distinct grams,
-    * spec-pinned zero at fixture SF), so the heaviest shuffle in the
-    * query carries 8-byte keys instead of 32-char md5 strings
-    * (VERDICT r14 #2). The join is an equi-join on the fingerprint
-    * (the distributed suffix-GROUP: all offsets sharing a 64-gram land
-    * in one reducer), and groups wider than 32 distinct docs are
-    * dropped BOTH sides before pairing — the ubiquitous-boilerplate
-    * guard that keeps the per-group pair fan-out quadratic only in a
-    * constant (Lee et al. drop these too; a passage in >32 docs is
-    * boilerplate for q_boilerplate, not pairwise duplication). Work is
-    * O(total chars) fingerprints + O(collision groups ≤ 32²) pairs,
-    * never O(docs²).
+    * SCALE CONTRACT: windows travel as 48-bit BIGINT fingerprints (md5
+    * prefix — the q_boilerplate / q_distinct_n idiom, identical in both
+    * engines; collision odds ~G²/2⁴⁹ over G distinct grams, spec-pinned
+    * zero at fixture SF), 8-byte shuffle keys from [[guardedWindows]].
+    * Work is O(total chars) + O(≤ 32² pairs per group), never O(docs²).
     */
   private[graft] def exactSubstringPairs(docs: DataFrame): DataFrame = {
-    val g = docs.filter(length(col("text")) >= 64)
-      .select(col("doc_id"), col("text"),
-        explode(expr("sequence(1, length(text) - 63)")).as("p"))
-      .select(col("doc_id"), expr(
-        "CAST(conv(substr(md5(substr(text, p, 64)), 1, 12), 16, 10) AS BIGINT)")
-        .as("h"))
-      .distinct()
-    val ok = g.groupBy("h").agg(count(lit(1)).as("nd"))
-      .filter(col("nd") <= 32).select("h")
-    val g2 = g.join(ok, "h")
-    g2.as("a").join(g2.as("b"),
+    val g = guardedWindows(docs, keepOffsets = false)
+    g.as("a").join(g.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(lng(count(lit(1))).as("n_shared"))
       .orderBy("doc_a", "doc_b")
+  }
+
+  /** Every-offset 64-char window fingerprints — `(doc_id, p, h)`, or
+    * distinct `(doc_id, h)` without offsets — minus each `h` in over 32
+    * distinct docs: the boilerplate guard bounding pair fan-out (Lee et
+    * al. drop these too). The guard is a window over one h-partitioned
+    * exchange, not an aggregate joined back, so explode + md5 run once
+    * and both sides of the callers' self join reuse that exchange; its
+    * count is pinned, as AQE would fold the byte-light exchange to one
+    * task. Docs per `h`: a row count on distinct rows, else the max of a
+    * doc-id dense_rank (a doc may repeat a passage). A group's window
+    * buffer spills to disk past `spark.sql.windowExec.buffer.spill.threshold`.
+    */
+  private def guardedWindows(docs: DataFrame, keepOffsets: Boolean): DataFrame = {
+    val g = docs.filter(length(col("text")) >= 64)
+      .select(col("doc_id"), col("text"),
+        explode(expr("sequence(1, length(text) - 63)")).as("p"))
+      .select(col("doc_id"), col("p"), expr(
+        "CAST(conv(substr(md5(substr(text, p, 64)), 1, 12), 16, 10) AS BIGINT)")
+        .as("h"))
+      .repartition(docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("h"))
+    val byH = Window.partitionBy("h")
+    val counted =
+      if (keepOffsets) g.withColumn("nd", dense_rank().over(byH.orderBy("doc_id")))
+        .withColumn("nd", max("nd").over(byH))
+      else g.select("doc_id", "h").distinct().withColumn("nd", count(lit(1)).over(byH))
+    counted.filter(col("nd") <= 32).drop("nd")
   }
 
   /** Maximal-span extraction on top of the exact fingerprints: shared
@@ -847,22 +856,13 @@ object DedupQueries {
     * and the length is what a removal policy thresholds on.
     *
     * Scale: the [[exactSubstringPairs]] contract carries over (48-bit
-    * BIGINT fingerprints, suffix-group equi-join, ≤32-doc boilerplate
-    * guard bounding fan-out); the added work is one window over the matched
-    * offset pairs, partitioned by (pair, diagonal) — candidates-sized,
-    * never corpus-sized.
+    * fingerprints, [[guardedWindows]]); the added work is one window over
+    * the matched offset pairs, partitioned by (pair, diagonal) —
+    * candidates-sized, never corpus-sized.
     */
   private[graft] def exactSubstringSpans(docs: DataFrame): DataFrame = {
-    val g = docs.filter(length(col("text")) >= 64)
-      .select(col("doc_id"), col("text"),
-        explode(expr("sequence(1, length(text) - 63)")).as("p"))
-      .select(col("doc_id"), col("p"), expr(
-        "CAST(conv(substr(md5(substr(text, p, 64)), 1, 12), 16, 10) AS BIGINT)")
-        .as("h"))
-    val ok = g.groupBy("h").agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") <= 32).select("h")
-    val g2 = g.join(ok, "h")
-    val occ = g2.as("a").join(g2.as("b"),
+    val g = guardedWindows(docs, keepOffsets = true)
+    val occ = g.as("a").join(g.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.p").as("pa"), (col("a.p") - col("b.p")).as("d"))

@@ -27,10 +27,6 @@ import graft.util.Det._
   */
 object EventFlowQueries {
 
-  private def eventsUs(s: org.apache.spark.sql.SparkSession, d: String) =
-    events(s, d).select(col("event_id"), col("user_id"), col("event_type"),
-      col("value"), unix_micros(col("ts")).as("us"))
-
   // ------------------------------------------------------------ seq pattern
 
   private val seqPattern = QueryDef(

@@ -19,11 +19,6 @@ import graft.util.Det._
   */
 object SessionQueries {
 
-  /** Shared projection: epoch-µs + tie-broken event ordering. */
-  private def eventsUs(s: org.apache.spark.sql.SparkSession, d: String) =
-    events(s, d).select(col("event_id"), col("user_id"), col("event_type"),
-      col("value"), unix_micros(col("ts")).as("us"))
-
   private val sessionize = QueryDef(
     "q_sessionize",
     "Batch sessionization: per-user 30-minute-gap sessions via the " +

@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Tables
 import graft.queries.DedupQueries
 
 /** q_dedup_substring_exact (SURVEY.md §2.28): the every-offset window
@@ -56,6 +61,51 @@ class ExactSubstringSpec extends AnyFunSuite {
       (k.toLong, filler(k, 15) + passage.take(64) + filler(k, 20))
     }.toDF("doc_id", "text")
     assert(DedupQueries.exactSubstringPairs(many).count() === 0)
+  }
+
+  // n docs sharing one 64-char window; the first doc optionally holds
+  // it twice, at two offsets
+  private def sharing(n: Int, repeatFirst: Boolean = false) =
+    (200 until 200 + n).map { k =>
+      val twice = if (repeatFirst && k == 200) filler(k, 9) + passage.take(64) else ""
+      (k.toLong, filler(k, 15) + passage.take(64) + twice + filler(k, 20))
+    }.toDF("doc_id", "text")
+
+  private val both = Seq[(String, DataFrame => DataFrame)](
+    "pairs" -> DedupQueries.exactSubstringPairs,
+    "spans" -> DedupQueries.exactSubstringSpans)
+
+  test("boilerplate guard boundary: 32 docs keep all C(32,2) pairs, 33 keep none") {
+    for ((name, f) <- both) {
+      assert(f(sharing(32)).count() === 496L, name)
+      assert(f(sharing(33)).count() === 0L, name)
+    }
+  }
+
+  test("boilerplate guard counts DISTINCT docs: a doc repeating the window is one doc") {
+    // 33 (doc, offset) rows but 32 docs: a row count would drop the group
+    for ((name, f) <- both)
+      assert(f(sharing(32, repeatFirst = true)).count() === 496L, name)
+  }
+
+  test("fingerprints are derived once: one Generate outside reused exchanges") {
+    // the guard is a window on the h-partitioned exchange both join
+    // sides reuse; an aggregate joined back re-derives the explode +
+    // md5 windows once per consumer
+    def generates(p: SparkPlan): Int = p match {
+      case _: ReusedExchangeExec => 0
+      case a: AdaptiveSparkPlanExec => generates(a.executedPlan)
+      case q: QueryStageExec => generates(q.plan)
+      case g: GenerateExec => 1 + g.children.map(generates).sum
+      case o => o.children.map(generates).sum
+    }
+    val docs = Tables.documentsSpread(spark, TestSpark.sf)
+    for ((name, f) <- both) {
+      val df = f(docs)
+      df.collect() // the final adaptive plan exists only after the action
+      val plan = df.queryExecution.executedPlan
+      assert(generates(plan) === 1, s"$name:\n$plan")
+    }
   }
 
   test("span extraction recovers planted passage lengths EXACTLY") {
