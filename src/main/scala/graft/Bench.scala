@@ -1,14 +1,17 @@
 package graft
 import com.fasterxml.jackson.core.io.JsonStringEncoder
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+
+import graft.LocalSpark.{Builder, firstLine, noop}
 
 /** Benchmark main (driver contract): one JSON line with per-query
   * steady-state seconds over SPARK_GRAFT_SF_DIR.
   *
-  * Before the timed loop, every query runs once untimed at sf0.001 —
-  * JVM/JIT + whole-stage-codegen warmup — so the timed numbers measure
-  * the plans, not first-call compilation (the first query otherwise
-  * pays ~3-4 s of one-time cost).
+  * Before the timed loop, every query runs once untimed on the sf0.001
+  * set beside SPARK_GRAFT_SF_DIR — JVM/JIT + whole-stage-codegen warmup
+  * — so the timed numbers measure the plans, not first-call compilation
+  * (the first query otherwise pays ~3-4 s of one-time cost). A key that throws there is printed
+  * as `[bench] <key> warm-up failed: ...` on stderr and still timed.
   */
 object Bench {
 
@@ -29,8 +32,6 @@ object Bench {
     "q_tpch_q1" -> 1.436,
     "q_dedup_minhash" -> 0.686,
     "q_window_rank" -> 0.513)
-
-  type Builder = (SparkSession, String) => DataFrame
 
   /** Per key: min across three INTERLEAVED passes over all
     * `builders`. The host VM stalls entire-JVM execution for tens of
@@ -54,14 +55,10 @@ object Bench {
       spark.sharedState.cacheManager.clearCache()
       builders.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        // noop sink forces full computation of every output column
-        // (count() would let Catalyst prune the projections being timed)
         name -> (try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          noop(fn(spark, sfDir))
           Right((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          Left(e.toString.linesIterator.nextOption().getOrElse("").take(500))
-        })
+        } catch { case e: Throwable => Left(firstLine(e)) })
       }
     }
     val byKey = samples.groupMap(_._1)(_._2)
@@ -102,14 +99,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     // optional args restrict the run to specific keys (targeted
     // re-measurement, mirroring Verify's key filter). Unknown keys are a
     // hard error: a typo would otherwise silently shrink the run and emit
@@ -125,10 +115,8 @@ object Bench {
         SparkEntry.queries.view
           .filterKeys(k => args.contains(k) || controlKeys.contains(k)).toMap
       else SparkEntry.queries
-    val warmDir = "/root/testdata/sf0.001"
-    keyed.foreach { case (_, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+    LocalSpark.warmUp(spark, keyed.toSeq, LocalSpark.warmDir(sfDir)).foreach { case (k, e) =>
+      System.err.println(s"[bench] $k warm-up failed: $e")
     }
     val (results, failed) = timedPasses(spark, sfDir, keyed.toSeq)
     failed.foreach { case (k, e) => System.err.println(s"[bench] $k failed: $e") }

@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (optimization rounds): per-query job/stage breakdown plus the
   * `.explain("formatted")` plan, for the keys given on the command line.
@@ -26,14 +25,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val outDir = args(1)
     val keys = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     new java.io.File(outDir).mkdirs()
 
     case class JobRow(id: Int, desc: String, start: Long, var end: Long = -1,
@@ -67,11 +59,9 @@ object ProfileQuery {
 
     // one untimed warmup pass at sf0.001 so JIT/codegen cost does not
     // pollute the first profiled key (mirrors Bench)
-    keys.foreach { k =>
-      try SparkEntry.queries(k)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    LocalSpark.warmUp(spark, keys.map(k => k -> SparkEntry.queries(k)),
+        LocalSpark.warmDir(sfDir))
+      .foreach { case (k, e) => System.err.println(s"[profile] $k warm-up failed: $e") }
     spark.sharedState.cacheManager.clearCache()
 
     keys.foreach { k =>
@@ -80,7 +70,7 @@ object ProfileQuery {
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(k)(spark, sfDir)
       val tBuild = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
+      LocalSpark.noop(df)
       val tEnd = System.nanoTime()
       spark.sparkContext.setJobDescription(null)
       // listener delivery is async; give the bus a moment to drain

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-exponent readout (VERDICT r14 #7): the 2x bench gate only
   * ever measures sf0.1, so the 100-TB claims rest on plan-shape
@@ -29,14 +28,7 @@ object Scaling {
     "q_suffix_array")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val keys = if (args.nonEmpty) args.toSeq else defaultKeys
     val unknown = keys.filterNot(SparkEntry.queries.contains)
     if (unknown.nonEmpty)
@@ -44,11 +36,8 @@ object Scaling {
     val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1")
     // one untimed warmup pass at the smallest SF (JIT + codegen)
-    keys.foreach { k =>
-      try SparkEntry.queries(k)(spark, sfs.head)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    LocalSpark.warmUp(spark, keys.map(k => k -> SparkEntry.queries(k)), sfs.head)
+      .foreach { case (k, e) => System.err.println(s"[scaling] $k warm-up failed: $e") }
     // per (sf, key): min over three interleaved passes. A failed pass
     // records None, NOT a near-zero elapsed time (ADVICE r15: timing an
     // exception as a measurement silently reports a bogus slope) — a
@@ -61,8 +50,7 @@ object Scaling {
           val t0 = System.nanoTime()
           val ok =
             try {
-              SparkEntry.queries(k)(spark, sf)
-                .write.format("noop").mode("overwrite").save()
+              LocalSpark.noop(SparkEntry.queries(k)(spark, sf))
               true
             } catch { case e: Throwable =>
               System.err.println(s"[scaling] $k failed at $sf: ${e.getMessage}")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -82,8 +83,7 @@ object AnnQueries {
     */
   private[graft] def ivfSearch(e: org.apache.spark.sql.DataFrame,
                                cent: org.apache.spark.sql.DataFrame) = {
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+    val probes = annProbes(e)
     val top2 = ivfTop2Cent(cent, probes)
     val w = Window.partitionBy("probe_id").orderBy(col("d2"), col("cand_id"))
     e.filter(col("vec_id") >= 5)
@@ -111,19 +111,50 @@ object AnnQueries {
       |      round(list_sum(list_transform(list_zip(p.pe, c.ce2), q -> (CAST(q[1] AS DOUBLE) - CAST(q[2] AS DOUBLE)) * (CAST(q[1] AS DOUBLE) - CAST(q[2] AS DOUBLE)))), 6), c.cand_id) AS rk
       |  FROM wprobes p CROSS JOIN corpus c) s WHERE rk <= 10)""".stripMargin
 
-  /** Spark twin of [[exactL2Top10Duck]]: (probe_id, cand_id). */
-  private def exactL2Top10(e: org.apache.spark.sql.DataFrame) = {
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    val corpus = e.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("ce2"))
+  /** The fixed probe set (vec_id < 5) as (probe_id, pe). */
+  private def annProbes(e: DataFrame) = e.filter(col("vec_id") < 5)
+    .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+
+  /** The searched corpus (vec_id >= 5) as (vec_id, embedding, label). */
+  private def annCorpus(e: DataFrame) = e.filter(col("vec_id") >= 5)
+    .select(col("vec_id"), col("embedding"), col("label"))
+
+  /** Spark twin of [[exactL2Top10Duck]]: (probe_id, cand_id), the exact
+    * L2 top-10 of `cands` (vec_id, embedding) per probe — by default
+    * the whole corpus; the delete paths pass the survivors.
+    */
+  private def exactL2Top10(probes: DataFrame, cands: DataFrame) = {
     val w = Window.partitionBy("probe_id").orderBy(col("d2"), col("cand_id"))
-    corpus.join(broadcast(probes))
+    cands.select(col("vec_id").as("cand_id"), col("embedding").as("ce2"))
+      .join(broadcast(probes))
       .withColumn("d2", round(l2sq("pe", "ce2"), 6))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 10)
       .select("probe_id", "cand_id")
   }
+
+  /** Per probe, one hit count per `(top, name)`: how many of that
+    * (probe_id, cand_id) top-10's rows are in the exact top-10 of
+    * `cands` — the readout every recall key shares.
+    */
+  private def hitsVsExact(probes: DataFrame, cands: DataFrame,
+      tops: (DataFrame, String)*): DataFrame = {
+    val exact = exactL2Top10(probes, cands)
+    tops.map { case (top, n) => exact
+        .join(top.withColumn("hit", lit(1)), Seq("probe_id", "cand_id"), "left")
+        .groupBy("probe_id").agg(lng(count(col("hit"))).as(n))
+    }.reduce(_.join(_, "probe_id"))
+  }
+
+  /** hits/10 on the 6-grid. */
+  private def recall(hits: String): Column = round(dbl(col(hits)) / lit(10.0), 6)
+
+  /** Recall@10 of a (probe_id, cand_id) top-10 against the full-corpus
+    * exact arm: (probe_id, hits, recall_at_10).
+    */
+  private def recallAt10(e: DataFrame, top: DataFrame): DataFrame =
+    hitsVsExact(annProbes(e), annCorpus(e), top -> "hits")
+      .withColumn("recall_at_10", recall("hits"))
 
   private val annCosine = QueryDef(
     "q_ann_cosine",
@@ -143,8 +174,7 @@ object AnnQueries {
            |FROM ranked WHERE rk <= 10 ORDER BY probe_id, rk""".stripMargin),
     (s, d) => {
       val e = embeddings(s, d)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val probes = annProbes(e)
       val corpus = e.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("cand_id"), col("embedding").as("ce"), col("label"))
       val w = Window.partitionBy("probe_id").orderBy(col("cos_sim").desc, col("cand_id"))
@@ -307,8 +337,7 @@ object AnnQueries {
     annCosine.oracle,
     (s, d) => {
       val e = embeddings(s, d)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val probes = annProbes(e)
       val corpus = e.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("cand_id"), col("embedding").as("ce"), col("label"))
       val topk = graft.functions.TopKByScore.topK(10)
@@ -353,8 +382,7 @@ object AnnQueries {
            |GROUP BY e.probe_id ORDER BY e.probe_id""".stripMargin),
     (s, d) => {
       val e = embeddings(s, d)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val probes = annProbes(e)
       val corpus = e.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("cand_id"), col("embedding").as("ce2"), col("label"))
       val top2 = ivfTop2(e, probes)
@@ -364,12 +392,7 @@ object AnnQueries {
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 10)
         .select("probe_id", "cand_id")
-      exactL2Top10(e).join(ivf.withColumn("hit", lit(1)),
-          Seq("probe_id", "cand_id"), "left")
-        .groupBy("probe_id")
-        .agg(lng(count(col("hit"))).as("hits"),
-          round(dbl(count(col("hit"))) / lit(10.0), 6).as("recall_at_10"))
-        .orderBy("probe_id")
+      recallAt10(e, ivf).orderBy("probe_id")
     }
   )
 
@@ -405,8 +428,7 @@ object AnnQueries {
             |GROUP BY e.probe_id ORDER BY e.probe_id""".stripMargin),
     (s, d) => {
       val e = embeddings(s, d)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val probes = annProbes(e)
       val corpus = e.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("cand_id"), col("embedding").as("ce2"))
       val w = Window.partitionBy("probe_id").orderBy(col("d2"), col("cand_id"))
@@ -417,12 +439,7 @@ object AnnQueries {
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 10)
         .select("probe_id", "cand_id")
-      exactL2Top10(e)
-        .join(lsh.withColumn("hit", lit(1)), Seq("probe_id", "cand_id"), "left")
-        .groupBy("probe_id")
-        .agg(lng(count(col("hit"))).as("hits"),
-          round(dbl(count(col("hit"))) / lit(10.0), 6).as("recall_at_10"))
-        .orderBy("probe_id")
+      recallAt10(e, lsh).orderBy("probe_id")
     }
   )
 
@@ -480,8 +497,7 @@ object AnnQueries {
     (s, d) => {
       val e = embeddings(s, d)
       val pred = col("cand_id") % 3 === 0
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val probes = annProbes(e)
       val corpusAll = e.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("cand_id"), col("embedding").as("ce2"),
           col("label"))
@@ -726,12 +742,7 @@ object AnnQueries {
         .withColumn("rk", row_number().over(wTop))
         .filter(col("rk") <= 10)
         .select("probe_id", "cand_id")
-      exactL2Top10(e).join(pq10.withColumn("hit", lit(1)),
-          Seq("probe_id", "cand_id"), "left")
-        .groupBy("probe_id")
-        .agg(lng(count(col("hit"))).as("hits"),
-          round(dbl(count(col("hit"))) / lit(10.0), 6).as("recall_at_10"))
-        .orderBy("probe_id")
+      recallAt10(e, pq10).orderBy("probe_id")
     }
   )
 
@@ -772,8 +783,7 @@ object AnnQueries {
             |GROUP BY e.probe_id, nc.n_cand ORDER BY e.probe_id""".stripMargin),
     (s, d) => {
       val e = embeddings(s, d)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val probes = annProbes(e)
       val allowed = e.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("cand_id"), col("label"))
         .join(broadcast(ivfTop2(e, probes).select("probe_id", "label")), "label")
@@ -787,11 +797,7 @@ object AnnQueries {
         .filter(col("rk") <= 10)
         .select("probe_id", "cand_id")
       val nc = pruned.groupBy("probe_id").agg(lng(count(lit(1))).as("n_cand"))
-      val out = exactL2Top10(e)
-        .join(top10.withColumn("hit", lit(1)), Seq("probe_id", "cand_id"), "left")
-        .groupBy("probe_id")
-        .agg(lng(count(col("hit"))).as("hits"),
-          round(dbl(count(col("hit"))) / lit(10.0), 6).as("recall_at_10"))
+      val out = recallAt10(e, top10)
         .join(nc, "probe_id")
         .select(col("probe_id"), col("n_cand"), col("hits"), col("recall_at_10"))
         .persist()
@@ -872,8 +878,7 @@ object AnnQueries {
     (s, d) => {
       import s.implicits._
       val e = embeddings(s, d)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val probes = annProbes(e)
       val corpus = e.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
       val wSim = Window.partitionBy("probe_id").orderBy(col("simq").desc, col("cand_id"))
@@ -956,42 +961,48 @@ object AnnQueries {
     * construction: ≤ 2·(M + LshM) + (in-links from ≤ 16 hubs); no
     * candidate generator is ever all-pairs.
     */
-  private[graft] def hnswEdges(corpus: org.apache.spark.sql.DataFrame) = {
+  private[graft] def hnswEdges(corpus: DataFrame): DataFrame =
+    hnswLists(corpus, corpus).distinct()
+
+  /** The per-node candidate lists behind [[hnswEdges]], for the `src`
+    * rows against the `dst` rows (both vec_id, embedding, label; src ⊆
+    * dst), not yet deduplicated: label 6-NN and LSH-band 6-NN (both
+    * symmetrized) plus the hub fan-out of the `src` hubs. [[hnswEdges]]
+    * is this over (corpus, corpus); tombstone compaction recomputes
+    * only the affected nodes' lists, (affected, survivors).
+    */
+  private def hnswLists(src: DataFrame, dst: DataFrame): DataFrame = {
+    import graft.functions.VectorFunctions.hyperplaneLshKeys
     val wSrc = Window.partitionBy("src").orderBy(col("d2"), col("dst"))
-    val knn = corpus.select(col("label"), col("vec_id").as("src"),
-        col("embedding").as("se"))
-      .join(corpus.select(col("label"), col("vec_id").as("dst"),
-        col("embedding").as("de")), "label")
-      .filter(col("src") =!= col("dst"))
+    def nearest(pairs: DataFrame, m: Int) = pairs
       .withColumn("d2", round(l2sq("se", "de"), 6))
       .withColumn("rk", row_number().over(wSrc))
-      .filter(col("rk") <= HnswM)
+      .filter(col("rk") <= m)
       .select("src", "dst")
+    val knn = nearest(src.select(col("label"), col("vec_id").as("src"),
+        col("embedding").as("se"))
+      .join(dst.select(col("label"), col("vec_id").as("dst"),
+        col("embedding").as("de")), "label")
+      .filter(col("src") =!= col("dst")), HnswM)
     // second generator: LSH-band-bounded candidates (the q_ann_lsh
     // keys), distinct pairs then per-src top-LshM — bridges the
     // neighborhoods the label grouping splits
-    import graft.functions.VectorFunctions.hyperplaneLshKeys
-    val keyed = corpus.select(col("vec_id"),
+    def keyed(df: DataFrame) = df.select(col("vec_id"),
       explode(hyperplaneLshKeys(col("embedding"), 4, 8, 64)).as("band_key"))
-    val lshCand = keyed.select(col("band_key"), col("vec_id").as("src"))
-      .join(keyed.select(col("band_key"), col("vec_id").as("dst")), "band_key")
+    val knn2 = nearest(keyed(src).select(col("band_key"), col("vec_id").as("src"))
+      .join(keyed(dst).select(col("band_key"), col("vec_id").as("dst")), "band_key")
       .filter(col("src") =!= col("dst"))
       .select("src", "dst").distinct()
-    val byIdE = corpus.select(col("vec_id"), col("embedding"))
-    val knn2 = lshCand
-      .join(byIdE.select(col("vec_id").as("src"), col("embedding").as("se")), "src")
-      .join(byIdE.select(col("vec_id").as("dst"), col("embedding").as("de")), "dst")
-      .withColumn("d2", round(l2sq("se", "de"), 6))
-      .withColumn("rk", row_number().over(wSrc))
-      .filter(col("rk") <= HnswLshM)
-      .select("src", "dst")
+      .join(dst.select(col("vec_id").as("src"), col("embedding").as("se")), "src")
+      .join(dst.select(col("vec_id").as("dst"), col("embedding").as("de")), "dst"),
+      HnswLshM)
     // hub fan-out through the partial-aggregating TopKByScore (k rows
     // per hub per map task cross the exchange, never the hub×corpus
     // score matrix — the q_ann_topk_agg shape)
     val topk = graft.functions.TopKByScore.topK(HnswHubK)
-    val hubs = corpus.filter(col("vec_id") < 21)
+    val hubs = src.filter(col("vec_id") < 21)
       .select(col("vec_id").as("hub"), col("embedding").as("he"))
-    val h2n = corpus.join(broadcast(hubs))
+    val h2n = dst.join(broadcast(hubs))
       .filter(col("vec_id") =!= col("hub"))
       .withColumn("score", -round(l2sq("he", "embedding"), 6))
       .groupBy("hub")
@@ -1002,7 +1013,6 @@ object AnnQueries {
       .unionAll(knn2)
       .unionAll(knn2.select(col("dst").as("src"), col("src").as("dst")))
       .unionAll(h2n)
-      .distinct()
   }
 
   /** The graph-build CTE chain (the [[hnswEdges]] Duck twin) over an
@@ -1176,8 +1186,7 @@ object AnnQueries {
     Some(hnswDuck),
     (s, d) => {
       val e = embeddings(s, d)
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id"), col("embedding"), col("label"))
+      val corpus = annCorpus(e)
       val edges = hnswEdges(corpus).persist()
       val res = hnswSearch(e, edges)
       // res is materialized inside hnswSearch, so releasing the build
@@ -1187,76 +1196,103 @@ object AnnQueries {
     }
   )
 
+  /** The one beam search behind the HNSW family (flat, persisted,
+    * delta re-link, layered, delete mask, compaction twins). Per probe
+    * it seeds at the `seeds` nearest `nodes` rows matching `entry`, then
+    * per layer `(edges, beams)` runs one round per beam width: expand
+    * the beam through `edges`, take the distinct union with the beam,
+    * score it against the probe over `nodes`, keep the `width` best.
+    * `nodes` (vec_id, embedding) is the scored set — the corpus, or the
+    * survivors in the delete paths, so a node missing from it can
+    * neither rank nor expand. Returns the `topK` best of the last beam
+    * (probe_id, cand_id) and every round's expansion set (probe_id,
+    * node), the visited readout.
+    *
+    *  - `bcast`: broadcast the probes and the beam (≤ probes × beam
+    *    rows) into the src-partitioned edge join. Off for the delta
+    *    re-link, whose probe batch grows with ingestion (AQE picks
+    *    broadcast when it is small).
+    *  - `frontierOnly`: expand only beam members not yet expanded in
+    *    this layer (the ef-search discipline; the expanded set resets
+    *    per layer) instead of the full beam every round.
+    *  - `keep`: applied to every per-round frame — `persist()` (the
+    *    caller releases the returned sets after materializing its
+    *    output), `localCheckpoint()` (the q_kcore discipline: truncates
+    *    the union/except lineage Catalyst would otherwise re-analyze
+    *    at double size per round) or `identity`. It sets the key's job
+    *    count, so each key keeps the choice it was measured with.
+    */
+  private def beamSearch(probes: DataFrame, nodes: DataFrame,
+      layers: Seq[(DataFrame, Seq[Int])], keep: DataFrame => DataFrame,
+      topK: Int = 10, bcast: Boolean = true, frontierOnly: Boolean = false,
+      entry: Column = col("vec_id") < 21, seeds: Int = HnswSeeds)
+      : (DataFrame, Seq[DataFrame]) = {
+    def bc(df: DataFrame) = if (bcast) broadcast(df) else df
+    val byId = nodes.select(col("vec_id").as("node"), col("embedding").as("ve"))
+    val entries = nodes.filter(entry)
+      .select(col("vec_id").as("node"), col("embedding").as("ve"))
+    val d2 = round(l2sq("pe", "ve"), 6)
+    def score(ids: DataFrame) =
+      ids.join(byId, "node").join(bc(probes), "probe_id").withColumn("d2", d2)
+    val wBeam = Window.partitionBy("probe_id").orderBy(col("d2"), col("node"))
+    def cut(scored: DataFrame, k: Int) = scored
+      .withColumn("rk", row_number().over(wBeam))
+      .filter(col("rk") <= k)
+      .select("probe_id", "node")
+    var beam = cut((if (bcast) entries.join(broadcast(probes))
+      else probes.join(broadcast(entries))).withColumn("d2", d2), seeds)
+    val visited = Seq.newBuilder[DataFrame]
+    for ((edges, widths) <- layers) {
+      var expandedAll: DataFrame = null
+      for (width <- widths) {
+        val from =
+          if (!frontierOnly) beam
+          else keep(if (expandedAll == null) beam else beam.except(expandedAll))
+        val expanded = bc(from)
+          .join(edges, from("node") === edges("src"))
+          .select(col("probe_id"), col("dst").as("node"))
+        val xt = keep(beam.unionAll(expanded).distinct())
+        visited += xt
+        if (frontierOnly)
+          expandedAll = if (expandedAll == null) from
+            else keep(expandedAll.unionAll(from).distinct())
+        beam = cut(score(xt), width)
+      }
+    }
+    (cut(score(beam), topK).withColumnRenamed("node", "cand_id"),
+      visited.result())
+  }
+
+  /** The flat search's single layer: [[HnswRounds]] rounds of
+    * beam-[[HnswBeam]] expansion over `edges`.
+    */
+  private def flatRounds(edges: DataFrame) =
+    Seq(edges -> Seq.fill(HnswRounds)(HnswBeam))
+
+  /** Per probe, the distinct nodes across the `visited` sets. */
+  private def visitedCount(visited: Seq[DataFrame], name: String) =
+    visited.reduce(_.unionAll(_)).distinct()
+      .groupBy("probe_id").agg(lng(count(lit(1))).as(name))
+
+  /** The searches' readout: (probe_id, n_visited, hits, recall_at_10). */
+  private def hnswReadout(e: DataFrame, top: DataFrame,
+      visited: Seq[DataFrame]) = recallAt10(e, top)
+    .join(visitedCount(visited, "n_visited"), "probe_id")
+    .select("probe_id", "n_visited", "hits", "recall_at_10")
+
   /** The q_ann_hnsw beam search given an arbitrary edge-table source —
     * in-plan ([[hnswEdges]], q_ann_hnsw) or a fresh scan of a persisted
     * index file (q_ann_hnsw_persisted). Exposed so HnswPersistSpec can
-    * drive the PROBE plan alone against the persisted graph. Returns
-    * the per-probe (n_visited, hits, recall@10) readout, materialized.
+    * gate the probe plan against the persisted graph. Returns the
+    * per-probe (n_visited, hits, recall@10) readout, materialized; the
+    * persisted per-round frames (each feeds both the next beam and the
+    * visited union) are released once it is.
     */
-  private[graft] def hnswSearch(e: org.apache.spark.sql.DataFrame,
-                                edges: org.apache.spark.sql.DataFrame,
-                                eager: Boolean = true)
-      : org.apache.spark.sql.DataFrame = {
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val hubs = corpus.filter(col("vec_id") < 21)
-        .select(col("vec_id").as("node"), col("embedding").as("ve"))
-      val byId = corpus.select(col("vec_id").as("node"),
-        col("embedding").as("ve"))
-      val wBeam = Window.partitionBy("probe_id").orderBy(col("d2"), col("node"))
-      def score(ids: org.apache.spark.sql.DataFrame) = ids
-        .join(byId, "node")
-        .join(broadcast(probes), "probe_id")
-        .withColumn("d2", round(l2sq("pe", "ve"), 6))
-      val c0 = hubs.join(broadcast(probes))
-        .withColumn("d2", round(l2sq("pe", "ve"), 6))
-        .withColumn("rk", row_number().over(wBeam))
-        .filter(col("rk") <= HnswSeeds)
-        .select("probe_id", "node")
-      var cand = c0
-      var visited: org.apache.spark.sql.DataFrame = null
-      // per-round frontier frames are persisted (each feeds BOTH the
-      // next beam and the visited union) and tracked for release after
-      // the final materialization — the sh/cand unpersist discipline
-      val roundFrames = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-      for (_ <- 1 to HnswRounds) {
-        // frontier is ≤ probes×Beam rows — broadcast it into the
-        // src-partitioned edge join, never the other way around
-        val expanded = broadcast(cand)
-          .join(edges, cand("node") === edges("src"))
-          .select(col("probe_id"), col("dst").as("node"))
-        val xt0 = cand.unionAll(expanded).distinct()
-        val xt = if (eager) { roundFrames += xt0.persist(); xt0 } else xt0
-        visited = if (visited == null) xt else visited.unionAll(xt)
-        cand = score(xt)
-          .withColumn("rk", row_number().over(wBeam))
-          .filter(col("rk") <= HnswBeam)
-          .select("probe_id", "node")
-      }
-      val top10 = score(cand)
-        .withColumn("rk", row_number().over(wBeam))
-        .filter(col("rk") <= 10)
-        .select("probe_id", "node")
-      val nv = visited.distinct().groupBy("probe_id")
-        .agg(lng(count(lit(1))).as("n_visited"))
-      val out = exactL2Top10(e)
-        .join(top10.withColumnRenamed("node", "cand_id")
-          .withColumn("hit", lit(1)), Seq("probe_id", "cand_id"), "left")
-        .groupBy("probe_id")
-        .agg(lng(count(col("hit"))).as("hits"),
-          round(dbl(count(col("hit"))) / lit(10.0), 6).as("recall_at_10"))
-        .join(nv, "probe_id")
-        .select(col("probe_id"), col("n_visited"), col("hits"),
-          col("recall_at_10"))
-      // eager = false leaves the whole plan lazy (HnswPersistSpec's
-      // plan gate must see the real probe plan, not an InMemory scan)
-      if (!eager) return out.orderBy("probe_id")
-      val outP = out.persist()
-      outP.count()
-      roundFrames.result().foreach(_.unpersist())
-      outP.orderBy("probe_id")
+  private[graft] def hnswSearch(e: DataFrame, edges: DataFrame): DataFrame = {
+    val (top, visited) =
+      beamSearch(annProbes(e), annCorpus(e), flatRounds(edges), _.persist())
+    materializeThenRelease(hnswReadout(e, top, visited), visited: _*)
+      .orderBy("probe_id")
   }
 
   /** Persisted graph-index lifecycle (VERDICT r11 #2): q_ann_hnsw
@@ -1288,8 +1324,7 @@ object AnnQueries {
     annHnsw.oracle,
     (s, d) => {
       val e = embeddings(s, d)
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id"), col("embedding"), col("label"))
+      val corpus = annCorpus(e)
       val sfTag = new java.io.File(d).getName.replace('.', '_')
       val wh = s.conf.get("spark.sql.warehouse.dir")
       val idxPath = s"$wh/graft_hnsw_edges_$sfTag"
@@ -1314,39 +1349,14 @@ object AnnQueries {
     * base ∪ new links, the O(batch · beam) insert cost the full
     * rebuild's corpus shuffle amortizes into.
     */
-  private[graft] def hnswLinkEdges(delta: org.apache.spark.sql.DataFrame,
-      base: org.apache.spark.sql.DataFrame,
-      baseEdges: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private[graft] def hnswLinkEdges(delta: DataFrame, base: DataFrame,
+      baseEdges: DataFrame): DataFrame = {
     val probes = delta.select(col("vec_id").as("probe_id"),
       col("embedding").as("pe"))
-    val byId = base.select(col("vec_id").as("node"), col("embedding").as("ve"))
-    val hubs = base.filter(col("vec_id") < 21)
-      .select(col("vec_id").as("node"), col("embedding").as("ve"))
-    val wBeam = Window.partitionBy("probe_id").orderBy(col("d2"), col("node"))
-    def score(ids: org.apache.spark.sql.DataFrame) = ids
-      .join(byId, "node")
-      .join(probes, "probe_id")
-      .withColumn("d2", round(l2sq("pe", "ve"), 6))
-    var cand = probes.join(broadcast(hubs))
-      .withColumn("d2", round(l2sq("pe", "ve"), 6))
-      .withColumn("rk", row_number().over(wBeam))
-      .filter(col("rk") <= HnswSeeds)
-      .select("probe_id", "node")
-    for (_ <- 1 to HnswRounds) {
-      val expanded = cand.join(baseEdges, cand("node") === baseEdges("src"))
-        .select(col("probe_id"), col("dst").as("node"))
-      cand = score(cand.unionAll(expanded).distinct())
-        .withColumn("rk", row_number().over(wBeam))
-        .filter(col("rk") <= HnswBeam)
-        .select("probe_id", "node")
-    }
-    val linked = score(cand)
-      .withColumn("rk", row_number().over(wBeam))
-      .filter(col("rk") <= HnswM)
-      .select("probe_id", "node")
-    linked.select(col("probe_id").as("src"), col("node").as("dst"))
-      .unionAll(linked.select(col("node").as("src"), col("probe_id").as("dst")))
+    val (linked, _) = beamSearch(probes, base, flatRounds(baseEdges),
+      identity, topK = HnswM, bcast = false)
+    linked.select(col("probe_id").as("src"), col("cand_id").as("dst"))
+      .unionAll(linked.select(col("cand_id").as("src"), col("probe_id").as("dst")))
   }
 
   private val hnswDeltaDuck: String =
@@ -1401,8 +1411,7 @@ object AnnQueries {
     Some(hnswDeltaDuck),
     (s, d) => {
       val e = embeddings(s, d)
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id"), col("embedding"), col("label"))
+      val corpus = annCorpus(e)
       val isDelta = col("vec_id") >= 100 && col("vec_id") % 11 === 0
       val base = corpus.filter(!isDelta)
       val delta = corpus.filter(isDelta)
@@ -1549,90 +1558,28 @@ object AnnQueries {
     * against the hierarchy) — HnswSpec pins strictly better mean
     * recall at strictly fewer total visited than the flat search.
     */
-  private[graft] def hnswLayeredSearch(e: org.apache.spark.sql.DataFrame,
-      l0Edges: org.apache.spark.sql.DataFrame,
-      l1Edges: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val corpus = e.filter(col("vec_id") >= 5)
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    val byId = corpus.select(col("vec_id").as("node"), col("embedding").as("ve"))
-    val l2 = corpus.filter(col("vec_id") % HnswL2Mod === 0)
-      .select(col("vec_id").as("node"), col("embedding").as("ve"))
-    val wBeam = Window.partitionBy("probe_id").orderBy(col("d2"), col("node"))
-    def score(ids: org.apache.spark.sql.DataFrame) = ids
-      .join(byId, "node")
-      .join(broadcast(probes), "probe_id")
-      .withColumn("d2", round(l2sq("pe", "ve"), 6))
-    // TOP LAYER: scan the N/64-sized entry set (counted as visited)
-    val l2Scan = l2.join(broadcast(probes))
-    var cand = l2Scan
-      .withColumn("d2", round(l2sq("pe", "ve"), 6))
-      .withColumn("rk", row_number().over(wBeam))
-      .filter(col("rk") <= HnswL1Beam)
-      .select("probe_id", "node")
-    var visited: org.apache.spark.sql.DataFrame =
-      l2Scan.select(col("probe_id"), col("node"))
-    // FRONTIER-ONLY expansion (the real HNSW ef-search discipline):
-    // each node's out-edges are followed at most once per layer, so a
-    // round's work is only the beam's NEW entrants — deeper chains for
-    // the same visited growth, instead of re-expanding the settled top
-    // of the beam every round. The expanded-set resets per layer (a
-    // layer-1 node re-expands over the richer layer-0 edges).
-    // localCheckpoint (the q_kcore discipline) truncates the
-    // except/union lineage each round — without it Catalyst re-analyzes
-    // a plan tree that doubles per round.
-    def expandRounds(edges: org.apache.spark.sql.DataFrame,
-        beams: Seq[Int]): Unit = {
-      var expandedAll: org.apache.spark.sql.DataFrame = null
-      for (beam <- beams) {
-        val frontier = (
-          if (expandedAll == null) cand else cand.except(expandedAll)
-        ).localCheckpoint()
-        val expanded = broadcast(frontier)
-          .join(edges, frontier("node") === edges("src"))
-          .select(col("probe_id"), col("dst").as("node"))
-        val xt = cand.unionAll(expanded).distinct().localCheckpoint()
-        visited = visited.unionAll(xt)
-        expandedAll =
-          if (expandedAll == null) frontier
-          else expandedAll.unionAll(frontier).distinct().localCheckpoint()
-        cand = score(xt)
-          .withColumn("rk", row_number().over(wBeam))
-          .filter(col("rk") <= beam)
-          .select("probe_id", "node")
-      }
-    }
-    // LAYER 1: narrow-beam descent over the sparse upper graph; the
-    // FULL final beam (not just HnswSeeds entries) seeds layer 0 —
-    // the diversity of the nearby entries is what replaces hub seeding
-    expandRounds(l1Edges, Seq.fill(HnswL1Rounds)(HnswL1Beam))
-    // LAYER 0: frontier-only rounds over the navigable base graph
-    expandRounds(l0Edges, HnswL0Beams)
-    // the beam is monotone (x_t ⊇ c_{t-1}), so the final beam already
+  private[graft] def hnswLayeredSearch(e: DataFrame, l0Edges: DataFrame,
+      l1Edges: DataFrame): DataFrame = {
+    val probes = annProbes(e)
+    val corpus = annCorpus(e)
+    val l2 = col("vec_id") % HnswL2Mod === 0
+    // TOP LAYER: the N/64-sized entry set seeds the narrow layer-1
+    // descent; its FULL final beam (not just HnswSeeds entries) seeds
+    // the frontier-only rounds over the navigable base graph — the
+    // diversity of the nearby entries is what replaces hub seeding.
+    // The beam is monotone (x_t ⊇ c_{t-1}), so the final beam already
     // holds the 10 best nodes ever scored — final-beam readout ≡
     // best-of-visited (verified equal), and cheaper
-    val top10 = score(cand)
-      .withColumn("rk", row_number().over(wBeam))
-      .filter(col("rk") <= 10)
-      .select("probe_id", "node")
-    val nv = visited.distinct().groupBy("probe_id")
-      .agg(lng(count(lit(1))).as("n_visited"))
-    val out = exactL2Top10(e)
-      .join(top10.withColumnRenamed("node", "cand_id")
-        .withColumn("hit", lit(1)), Seq("probe_id", "cand_id"), "left")
-      .groupBy("probe_id")
-      .agg(lng(count(col("hit"))).as("hits"),
-        round(dbl(count(col("hit"))) / lit(10.0), 6).as("recall_at_10"))
-      .join(nv, "probe_id")
-      .select(col("probe_id"), col("n_visited"), col("hits"),
-        col("recall_at_10"))
+    val (top, visited) = beamSearch(probes, corpus,
+      Seq(l1Edges -> Seq.fill(HnswL1Rounds)(HnswL1Beam), l0Edges -> HnswL0Beams),
+      _.localCheckpoint(), frontierOnly = true, entry = l2, seeds = HnswL1Beam)
+    // the top-layer scan counts as visited
+    val l2Scan = corpus.filter(l2).select(col("vec_id").as("node"))
+      .join(broadcast(probes)).select("probe_id", "node")
     // materialize before returning so the checkpointed round RDDs are
     // droppable by the ContextCleaner once this frame is consumed
-    val outP = out.persist()
-    outP.count()
-    outP.orderBy("probe_id")
+    materializeThenRelease(hnswReadout(e, top, l2Scan +: visited))
+      .orderBy("probe_id")
   }
 
   /** True hierarchical HNSW (VERDICT r13 #2): q_ann_hnsw's single flat
@@ -1674,8 +1621,7 @@ object AnnQueries {
     Some(hnswLayeredDuck),
     (s, d) => {
       val e = embeddings(s, d)
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id"), col("embedding"), col("label"))
+      val corpus = annCorpus(e)
       val l0 = hnswNavEdges(corpus).persist()
       val l1 = hnswNavEdges(corpus.filter(col("vec_id") % HnswL1Mod === 0),
         HnswNavMUpper).persist()
@@ -1693,9 +1639,10 @@ object AnnQueries {
     * by a separate build job, and the probe is [[hnswLayeredSearch]]
     * over fresh scans of those files — row-identical to
     * q_ann_hnsw_layered (same oracle; HnswSpec also pins the parity
-    * directly). Unlike the flat probe there is no single lazy plan to
-    * gate (the frontier-only rounds localCheckpoint, executing
-    * eagerly), so the spec contract is row parity + the index files
+    * directly). Unlike the flat probe, whose cached readout still
+    * carries the round plans down to the edge scan, there is no plan to
+    * gate (the frontier-only rounds localCheckpoint, which cuts the
+    * lineage), so the spec contract is row parity + the index files
     * being the probe's only non-corpus inputs by construction.
     *
     * Scale: the layered build is per-layer shardable (each layer's
@@ -1713,8 +1660,7 @@ object AnnQueries {
     annHnswLayered.oracle,
     (s, d) => {
       val e = embeddings(s, d)
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id"), col("embedding"), col("label"))
+      val corpus = annCorpus(e)
       val sfTag = new java.io.File(d).getName.replace('.', '_')
       val wh = s.conf.get("spark.sql.warehouse.dir")
       val l0Path = s"$wh/graft_hnswl_l0_$sfTag"
@@ -1753,10 +1699,8 @@ object AnnQueries {
       d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val e = embeddings(s, d)
-    val corpus = e.filter(col("vec_id") >= 5)
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+    val corpus = annCorpus(e)
+    val probes = annProbes(e)
     val sfTag = new java.io.File(d).getName.replace('.', '_')
     val wh = s.conf.get("spark.sql.warehouse.dir")
     // deletes arrive as a tombstone FILE (takedown list), not a filter
@@ -1803,53 +1747,14 @@ object AnnQueries {
     // nodes before any beam, so they can neither rank nor expand)
     val edgePath = s"$wh/graft_ann_del_edges_$sfTag"
     hnswEdges(corpus).write.mode("overwrite").parquet(edgePath)
-    val edges = s.read.parquet(edgePath)
-    val byIdS = survivors.select(col("vec_id").as("node"), col("embedding").as("ve"))
-    val hubs = survivors.filter(col("vec_id") < 21)
-      .select(col("vec_id").as("node"), col("embedding").as("ve"))
-    val wBeam = Window.partitionBy("probe_id").orderBy(col("d2"), col("node"))
-    def score(ids: org.apache.spark.sql.DataFrame) = ids
-      .join(byIdS, "node")
-      .join(broadcast(probes), "probe_id")
-      .withColumn("d2", round(l2sq("pe", "ve"), 6))
-    var cand = hubs.join(broadcast(probes))
-      .withColumn("d2", round(l2sq("pe", "ve"), 6))
-      .withColumn("rk", row_number().over(wBeam))
-      .filter(col("rk") <= HnswSeeds)
-      .select("probe_id", "node")
-    for (_ <- 1 to HnswRounds) {
-      val expanded = broadcast(cand)
-        .join(edges, cand("node") === edges("src"))
-        .select(col("probe_id"), col("dst").as("node"))
-      cand = score(cand.unionAll(expanded).distinct().localCheckpoint())
-        .withColumn("rk", row_number().over(wBeam))
-        .filter(col("rk") <= HnswBeam)
-        .select("probe_id", "node")
-    }
-    val gTop10 = score(cand)
-      .withColumn("rk", row_number().over(wBeam))
-      .filter(col("rk") <= 10)
-      .select(col("probe_id"), col("node").as("cand_id"))
+    val (gTop10, _) = beamSearch(probes, survivors,
+      flatRounds(s.read.parquet(edgePath)), _.localCheckpoint())
 
     // ---- readout: recall of each arm vs the exact arm on SURVIVORS
-    val sexact = survivors
-      .select(col("vec_id").as("cand_id"), col("embedding").as("ce2"))
-      .join(broadcast(probes))
-      .withColumn("d2", round(l2sq("pe", "ce2"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 10)
-      .select("probe_id", "cand_id")
-    val ivfh = sexact
-      .join(ivfTop10.withColumn("h", lit(1)), Seq("probe_id", "cand_id"), "left")
-      .groupBy("probe_id").agg(lng(count(col("h"))).as("ivf_hits"))
-    val gh = sexact
-      .join(gTop10.withColumn("h", lit(1)), Seq("probe_id", "cand_id"), "left")
-      .groupBy("probe_id").agg(lng(count(col("h"))).as("g_hits"))
-    val out = ivfh.join(gh, "probe_id")
-      .select(col("probe_id"), col("ivf_hits"),
-        round(dbl(col("ivf_hits")) / lit(10.0), 6).as("ivf_recall"),
-        col("g_hits"),
-        round(dbl(col("g_hits")) / lit(10.0), 6).as("g_recall"))
+    val out = hitsVsExact(probes, survivors,
+        ivfTop10 -> "ivf_hits", gTop10 -> "g_hits")
+      .select(col("probe_id"), col("ivf_hits"), recall("ivf_hits").as("ivf_recall"),
+        col("g_hits"), recall("g_hits").as("g_recall"))
       .orderBy("probe_id")
     (out, ivfTop10, gTop10, tombs)
   }
@@ -1980,12 +1885,9 @@ object AnnQueries {
   private[graft] def annCompactParts(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import graft.functions.VectorFunctions.hyperplaneLshKeys
     val e = embeddings(s, d)
-    val corpus = e.filter(col("vec_id") >= 5)
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+    val corpus = annCorpus(e)
+    val probes = annProbes(e)
     val sfTag = new java.io.File(d).getName.replace('.', '_')
     val wh = s.conf.get("spark.sql.warehouse.dir")
     // the pre-delete persisted index + the tombstone takedown file —
@@ -2024,49 +1926,8 @@ object AnnQueries {
       .select(col("src").as("vec_id")).distinct()
       .join(tombs, Seq("vec_id"), "left_anti")
     val affRows = survivors.join(aff, Seq("vec_id"), "left_semi").persist()
-    val wSrc = Window.partitionBy("src").orderBy(col("d2"), col("dst"))
-    val knnA = affRows.select(col("label"), col("vec_id").as("src"),
-        col("embedding").as("se"))
-      .join(survivors.select(col("label"), col("vec_id").as("dst"),
-        col("embedding").as("de")), "label")
-      .filter(col("src") =!= col("dst"))
-      .withColumn("d2", round(l2sq("se", "de"), 6))
-      .withColumn("rk", row_number().over(wSrc))
-      .filter(col("rk") <= HnswM)
-      .select("src", "dst")
-    val keyedS = survivors.select(col("vec_id"),
-      explode(hyperplaneLshKeys(col("embedding"), 4, 8, 64)).as("band_key"))
-    val keyedA = affRows.select(col("vec_id"),
-      explode(hyperplaneLshKeys(col("embedding"), 4, 8, 64)).as("band_key"))
-    val byIdS = survivors.select(col("vec_id"), col("embedding"))
-    val knn2A = keyedA.select(col("band_key"), col("vec_id").as("src"))
-      .join(keyedS.select(col("band_key"), col("vec_id").as("dst")), "band_key")
-      .filter(col("src") =!= col("dst"))
-      .select("src", "dst").distinct()
-      .join(byIdS.select(col("vec_id").as("src"), col("embedding").as("se")), "src")
-      .join(byIdS.select(col("vec_id").as("dst"), col("embedding").as("de")), "dst")
-      .withColumn("d2", round(l2sq("se", "de"), 6))
-      .withColumn("rk", row_number().over(wSrc))
-      .filter(col("rk") <= HnswLshM)
-      .select("src", "dst")
-    val topk = graft.functions.TopKByScore.topK(HnswHubK)
-    val hubsA = affRows.filter(col("vec_id") < 21)
-      .select(col("vec_id").as("hub"), col("embedding").as("he"))
-    val h2nA = survivors.join(broadcast(hubsA))
-      .filter(col("vec_id") =!= col("hub"))
-      .withColumn("score", -round(l2sq("he", "embedding"), 6))
-      .groupBy("hub")
-      .agg(topk(col("vec_id"), lit(""), col("score")).as("top"))
-      .select(col("hub").as("src"), explode(col("top")).as("c"))
-      .select(col("src"), col("c.cand_id").as("dst"))
     val cmpPath = s"$wh/graft_ann_cmp_edges_$sfTag"
-    kept
-      .unionAll(knnA)
-      .unionAll(knnA.select(col("dst").as("src"), col("src").as("dst")))
-      .unionAll(knn2A)
-      .unionAll(knn2A.select(col("dst").as("src"), col("src").as("dst")))
-      .unionAll(h2nA)
-      .distinct()
+    kept.unionAll(hnswLists(affRows, survivors)).distinct()
       .write.mode("overwrite").parquet(cmpPath)
     val cedges = s.read.parquet(cmpPath).persist()
 
@@ -2075,61 +1936,19 @@ object AnnQueries {
     // steady state), the compact arm the rewritten index. Visited =
     // the union of raw pre-score expansion sets, so the masked arm
     // pays for every tombstone its frontier touches.
-    val hubsS = survivors.filter(col("vec_id") < 21)
-      .select(col("vec_id").as("node"), col("embedding").as("ve"))
-    val byIdN = survivors.select(col("vec_id").as("node"), col("embedding").as("ve"))
-    val wBeam = Window.partitionBy("probe_id").orderBy(col("d2"), col("node"))
-    def score(ids: org.apache.spark.sql.DataFrame) = ids
-      .join(byIdN, "node")
-      .join(broadcast(probes), "probe_id")
-      .withColumn("d2", round(l2sq("pe", "ve"), 6))
-    def beamSearch(edges: org.apache.spark.sql.DataFrame) = {
-      var cand = hubsS.join(broadcast(probes))
-        .withColumn("d2", round(l2sq("pe", "ve"), 6))
-        .withColumn("rk", row_number().over(wBeam))
-        .filter(col("rk") <= HnswSeeds)
-        .select("probe_id", "node")
-      var visited: org.apache.spark.sql.DataFrame = null
-      for (_ <- 1 to HnswRounds) {
-        val expanded = broadcast(cand)
-          .join(edges, cand("node") === edges("src"))
-          .select(col("probe_id"), col("dst").as("node"))
-        val xt = cand.unionAll(expanded).distinct().localCheckpoint()
-        visited = if (visited == null) xt else visited.unionAll(xt)
-        cand = score(xt)
-          .withColumn("rk", row_number().over(wBeam))
-          .filter(col("rk") <= HnswBeam)
-          .select("probe_id", "node")
-      }
-      val top10 = score(cand)
-        .withColumn("rk", row_number().over(wBeam))
-        .filter(col("rk") <= 10)
-        .select(col("probe_id"), col("node").as("cand_id"))
-      val nv = visited.distinct().groupBy("probe_id")
-        .agg(lng(count(lit(1))).as("n_visited"))
-      (top10, nv)
+    def probe(edges: DataFrame, visitedName: String) = {
+      val (top, visited) = beamSearch(probes, survivors, flatRounds(edges),
+        _.localCheckpoint())
+      (top, visitedCount(visited, visitedName))
     }
-    val (mTop, mNv) = beamSearch(base)
-    val (cTop, cNv) = beamSearch(cedges)
-    val sexact = survivors
-      .select(col("vec_id").as("cand_id"), col("embedding").as("ce2"))
-      .join(broadcast(probes))
-      .withColumn("d2", round(l2sq("pe", "ce2"), 6))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("d2"), col("cand_id"))))
-      .filter(col("rk") <= 10)
-      .select("probe_id", "cand_id")
-    def hits(top: org.apache.spark.sql.DataFrame, n: String) = sexact
-      .join(top.withColumn("h", lit(1)), Seq("probe_id", "cand_id"), "left")
-      .groupBy("probe_id").agg(lng(count(col("h"))).as(n))
-    val out = hits(mTop, "m_hits")
-      .join(hits(cTop, "c_hits"), "probe_id")
-      .join(mNv.withColumnRenamed("n_visited", "m_visited"), "probe_id")
-      .join(cNv.withColumnRenamed("n_visited", "c_visited"), "probe_id")
+    val (mTop, mNv) = probe(base, "m_visited")
+    val (cTop, cNv) = probe(cedges, "c_visited")
+    val out = hitsVsExact(probes, survivors, mTop -> "m_hits", cTop -> "c_hits")
+      .join(mNv, "probe_id")
+      .join(cNv, "probe_id")
       .select(col("probe_id"), col("m_visited"), col("m_hits"),
-        round(dbl(col("m_hits")) / lit(10.0), 6).as("m_recall"),
-        col("c_visited"), col("c_hits"),
-        round(dbl(col("c_hits")) / lit(10.0), 6).as("c_recall"))
+        recall("m_hits").as("m_recall"),
+        col("c_visited"), col("c_hits"), recall("c_hits").as("c_recall"))
       .orderBy("probe_id")
     (materializeThenRelease(out, base, survivors, affRows, cedges),
       cedges, base, tombs)

@@ -9,14 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /** graft.Bench must never time a key that throws: the time to a throw
   * would benchmark a broken key as a fast one. A key that throws in
   * any timed pass is out of "queries" and of the total, and listed with
-  * its error under "failed", ahead of the "metric"/"value" tail.
+  * its error under "failed", ahead of the "metric"/"value" tail. The
+  * untimed warm-up shared by the mains must report a throwing key, not
+  * swallow it.
   */
 class BenchSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   test("a key throwing in any timed pass is reported failed, never timed") {
     var calls = 0
-    val builders = Seq[(String, Bench.Builder)](
+    val builders = Seq[(String, LocalSpark.Builder)](
       "q_ok" -> ((s: SparkSession, _: String) => s.range(10).toDF()),
       "q_boom" -> ((_: SparkSession, _: String) =>
         throw new IllegalStateException("planted \"failure\"")),
@@ -38,5 +40,14 @@ class BenchSpec extends AnyFunSuite {
     assert(json.get("value").asDouble() === times("q_ok"))
     val fields = json.fieldNames().asScala.toSeq
     assert(fields.takeRight(4) === Seq("failed", "metric", "unit", "value"), line)
+  }
+
+  test("the warm-up returns each throwing key with its first error line") {
+    val builders = Seq[(String, LocalSpark.Builder)](
+      "q_ok" -> ((s: SparkSession, _: String) => s.range(10).toDF()),
+      "q_boom" -> ((_: SparkSession, _: String) =>
+        throw new IllegalStateException("planted warm-up failure\nsecond line")))
+    assert(LocalSpark.warmUp(spark, builders, TestSpark.sf) === Seq(
+      "q_boom" -> "java.lang.IllegalStateException: planted warm-up failure"))
   }
 }

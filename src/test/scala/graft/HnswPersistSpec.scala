@@ -30,8 +30,7 @@ class HnswPersistSpec extends AnyFunSuite {
     val idxPath =
       s"${spark.conf.get("spark.sql.warehouse.dir")}/graft_hnsw_edges_$sfTag"
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val probe = AnnQueries.hnswSearch(e, spark.read.parquet(idxPath),
-      eager = false)
+    val probe = AnnQueries.hnswSearch(e, spark.read.parquet(idxPath))
     val plan = probe.queryExecution.executedPlan.toString
     // the edge table is scanned...
     assert(plan.contains("graft_hnsw_edges_"),
