@@ -66,6 +66,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * reader of version N is untouched by version N+1 committing under
   * it. Truncate defers physical deletion to [[DocStore.vacuum]].
   *
+  * Manifest format (UTF-8 text, one record per line; a full body lists
+  * every live file, a delta body (`#delta\t<parent>`) only this
+  * commit's changes — see the checkpoint notes below):
+  * {{{
+  * <name>\t<len>               full body: one live data file
+  * +\t<name>\t<len> / -\t<name> delta body: file added / retired
+  * #ts #op #schema #keydomain  per-commit headers
+  * #dv #bloom #part            per-file metadata, keyed by file name
+  * #stats\t<name>\t<rows>\t<col>=<range>...
+  *                             per-file column ranges: L<min>,<max>
+  *                             (long), D<min>,<max> (double bits, hex),
+  *                             S<min>,<max> (string 8-byte prefix,
+  *                             hex) — the fold of the file's block stats
+  * #stream #colmap #check      cumulative table state
+  * }}}
+  * A `#stats` line is written once, in the commit that adds its file
+  * (and in every full body and checkpoint that lists the file), and
+  * leaves with the file. The scan planner drops files whose ranges
+  * cannot satisfy a pushed filter, and merge/delete pick the files they
+  * rewrite from the same ranges. Stats cover every row, DV-masked ones
+  * included, so they only ever over-approximate. A manifest written
+  * before stats existed carries no `#stats` lines: its files are never
+  * stats-pruned, and merge/delete read their block headers instead.
+  *
   * Supported column types: BIGINT, DOUBLE, STRING, BOOLEAN.
   */
 object DocStore {
@@ -99,7 +123,8 @@ object DocStore {
   /** Local-mode test instrumentation only (executors share the JVM in
     * tests): block-skip effectiveness counters for DocStoreSpec. On a
     * real cluster these would be per-executor and surface through the
-    * DSv2 custom-metric API instead.
+    * DSv2 custom-metric API instead. A file the planner drops on its
+    * manifest stats counts all its blocks as skipped.
     */
   val blocksRead = new LongAdder
   val blocksSkipped = new LongAdder
@@ -317,6 +342,93 @@ object DocStore {
     case IsNull(c) => Some(c)
     case _ => None
   }
+
+  // ------------------------------- per-file column stats (manifest)
+  //
+  // The writer folds each file's block stats (tags 1/2/3) into one
+  // range per column and the commit records it as a `#stats` manifest
+  // line, so the planner can drop a file without opening it — the
+  // Delta add-action stats / Iceberg column-bounds shape. Ranges are
+  // keyed by the file's PHYSICAL column names, like `#bloom` and
+  // `#part`. A column with no non-null value (or a BOOLEAN one, which
+  // carries no block stats) has no entry and never prunes.
+
+  private[graft] sealed trait ColRange
+  private[graft] final case class LongRange(min: Long, max: Long)
+      extends ColRange
+  private[graft] final case class DoubleRange(min: Double, max: Double)
+      extends ColRange
+  /** Unsigned range of packed 8-byte UTF-8 prefixes (see [[packPrefix]]). */
+  private[graft] final case class PrefixRange(min: Long, max: Long)
+      extends ColRange
+
+  /** One data file's row count and per-column ranges. */
+  private[graft] final case class FileStats(rows: Long,
+      cols: Map[String, ColRange]) {
+    /** The writer cuts a block every [[BlockRows]] rows. */
+    def blocks: Long = (rows + BlockRows - 1) / BlockRows
+  }
+
+  /** The smallest range covering both (same column, so same kind). */
+  private[graft] def widen(a: ColRange, b: ColRange): ColRange = (a, b) match {
+    case (LongRange(a0, a1), LongRange(b0, b1)) =>
+      LongRange(math.min(a0, b0), math.max(a1, b1))
+    case (DoubleRange(a0, a1), DoubleRange(b0, b1)) =>
+      DoubleRange(if (java.lang.Double.compare(a0, b0) <= 0) a0 else b0,
+        if (java.lang.Double.compare(a1, b1) >= 0) a1 else b1)
+    case (PrefixRange(a0, a1), PrefixRange(b0, b1)) =>
+      PrefixRange(
+        if (java.lang.Long.compareUnsigned(a0, b0) <= 0) a0 else b0,
+        if (java.lang.Long.compareUnsigned(a1, b1) >= 0) a1 else b1)
+    case _ => throw new IllegalStateException(
+      s"docstore: mixed column ranges $a / $b")
+  }
+
+  /** Can any row of a file with range `r` satisfy `f`? The block-level
+    * tests, applied to the file's fold of its blocks.
+    */
+  private[sources] def rangeMayMatch(f: Filter, r: ColRange): Boolean =
+    r match {
+      case LongRange(a, b) => blockMayMatch(f, a, b)
+      case DoubleRange(a, b) => blockMayMatch(f, a, b)
+      case PrefixRange(a, b) => blockMayMatchString(f, a, b)
+    }
+
+  private def statsLine(name: String, s: FileStats): String = {
+    def hex(l: Long) = java.lang.Long.toHexString(l)
+    def dbl(d: Double) = hex(java.lang.Double.doubleToRawLongBits(d))
+    (Seq("#stats", name, s.rows.toString) ++
+      s.cols.toSeq.sortBy(_._1).map { case (c, r) =>
+        java.net.URLEncoder.encode(c, "UTF-8") + "=" + (r match {
+          case LongRange(a, b) => s"L$a,$b"
+          case DoubleRange(a, b) => s"D${dbl(a)},${dbl(b)}"
+          case PrefixRange(a, b) => s"S${hex(a)},${hex(b)}"
+        })
+      }).mkString("\t")
+  }
+
+  /** None for a line this reader cannot parse (another revision of
+    * the format): stats only ever prune, so a file without them is
+    * merely scanned, never misread.
+    */
+  private def parseStatsLine(l: String): Option[(String, FileStats)] =
+    scala.util.Try {
+      def unhex(s: String) = java.lang.Long.parseUnsignedLong(s, 16)
+      val a = l.split('\t')
+      val cols = a.drop(3).map { kv =>
+        val i = kv.indexOf('=')
+        require(i > 0)
+        val Array(lo, hi) = kv.substring(i + 2).split(',')
+        val r: ColRange = kv.charAt(i + 1) match {
+          case 'L' => LongRange(lo.toLong, hi.toLong)
+          case 'D' => DoubleRange(java.lang.Double.longBitsToDouble(unhex(lo)),
+            java.lang.Double.longBitsToDouble(unhex(hi)))
+          case 'S' => PrefixRange(unhex(lo), unhex(hi))
+        }
+        java.net.URLDecoder.decode(kv.take(i), "UTF-8") -> r
+      }.toMap
+      a(1) -> FileStats(a(2).toLong, cols)
+    }.toOption
 
   private[graft] def listDataFiles(dir: String): Seq[(String, Long)] = {
     val p = new Path(dir)
@@ -549,7 +661,8 @@ object DocStore {
       parts: Map[String, Seq[(String, Option[String])]] = Map.empty,
       streams: Map[String, Long] = Map.empty,
       colmaps: Map[String, String] = Map.empty,
-      checks: Map[String, (Long, Long)] = Map.empty)
+      checks: Map[String, (Long, Long)] = Map.empty,
+      stats: Map[String, FileStats] = Map.empty)
 
   // ------------------------- checkpoint + delta-tail manifests (r17)
   //
@@ -772,7 +885,13 @@ object DocStore {
       streams: Map[String, Long],
       colmaps: Map[String, String],
       checks: Map[String, Option[(Long, Long)]],
-      op: Option[String])
+      op: Option[String],
+      stats: Map[String, FileStats])
+
+  /** The state before version 1: what a delta chain folds onto. */
+  private val emptyBody = ParsedBody(None, Seq.empty, Seq.empty, Seq.empty,
+    Map.empty, Seq.empty, Map.empty, Seq.empty, None, None, Map.empty,
+    Map.empty, Map.empty, Map.empty, None, Map.empty)
 
   private def parseBody(body: String): ParsedBody = {
     var deltaBase: Option[Long] = None
@@ -790,6 +909,7 @@ object DocStore {
     val colmaps = Map.newBuilder[String, String]
     val checks = Map.newBuilder[String, Option[(Long, Long)]]
     var op: Option[String] = None
+    val stats = Map.newBuilder[String, FileStats]
     body.linesIterator.foreach { l =>
       if (l.isEmpty) ()
       else if (l.startsWith("#delta\t"))
@@ -818,6 +938,8 @@ object DocStore {
         val a = l.split('\t')
         checks += ((a(1),
           if (a(2) == "drop") None else Some((a(2).toLong, a(3).toLong))))
+      } else if (l.startsWith("#stats\t")) {
+        parseStatsLine(l).foreach(stats += _)
       } else if (l.startsWith("#part\t")) {
         val a = l.split('\t')
         parts += a(1) -> a.drop(2).toSeq.map { kv =>
@@ -836,7 +958,7 @@ object DocStore {
     ParsedBody(deltaBase, files.result(), adds.result(), removes.result(),
       dvs.result(), dvRemoves.result(), blooms.result(),
       bloomRemoves.result(), kd, schema, parts.result(), streams.result(),
-      colmaps.result(), checks.result(), op)
+      colmaps.result(), checks.result(), op, stats.result())
   }
 
   private def readFileBody(dir: String, p: Path): String = {
@@ -879,11 +1001,7 @@ object DocStore {
         else {
           deltas ::= p
           cur -= 1
-          if (cur == 0L) {
-            base = ParsedBody(None, Seq.empty, Seq.empty, Seq.empty,
-              Map.empty, Seq.empty, Map.empty, Seq.empty, None, None,
-              Map.empty, Map.empty, Map.empty, Map.empty, None)
-          }
+          if (cur == 0L) base = emptyBody
         }
       } else {
         val cp = checkpointPath(dir, cur)
@@ -896,11 +1014,7 @@ object DocStore {
           else {
             deltas ::= p
             cur -= 1
-            if (cur == 0L) {
-              base = ParsedBody(None, Seq.empty, Seq.empty, Seq.empty,
-                Map.empty, Seq.empty, Map.empty, Seq.empty, None, None,
-                Map.empty, Map.empty, Map.empty, Map.empty, None)
-            }
+            if (cur == 0L) base = emptyBody
           }
         }
       }
@@ -924,12 +1038,15 @@ object DocStore {
     val checks =
       scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
     base.checks.foreach { case (c, r) => r.foreach(checks(c) = _) }
+    val stats = scala.collection.mutable.LinkedHashMap.empty[String, FileStats]
+    stats ++= base.stats
     var schema = base.schemaDdl
     deltas.foreach { d =>
       d.removeFiles.foreach { n =>
         order -= n
         dvs -= n
         parts -= n
+        stats -= new Path(n).getName
         blooms.keys.filter(_._1 == n).toSeq.foreach(blooms -= _)
       }
       d.addFiles.foreach { case (n, len) => order(n) = len }
@@ -938,6 +1055,7 @@ object DocStore {
       d.blooms.foreach { case (k, b) => blooms(k) = b }
       d.bloomRemoves.foreach(blooms -= _)
       d.parts.foreach { case (n, t) => parts(n) = t }
+      d.stats.foreach { case (n, st) => stats(n) = st }
       d.streams.foreach { case (q, e) => streams(q) = e }
       d.colmaps.foreach { case (p, l) => colmaps(p) = l }
       d.checks.foreach {
@@ -953,7 +1071,7 @@ object DocStore {
     Snapshot(v,
       order.toSeq.map { case (n, len) => (new Path(dir, n).toString, len) },
       dvs.toMap, blooms.toMap, kd, schema, parts.toMap, streams.toMap,
-      colmaps.toMap, checks.toMap)
+      colmaps.toMap, checks.toMap, stats.toMap)
   }
 
   /** Data files of snapshot `v`: absolute path + byte length.
@@ -1036,7 +1154,8 @@ object DocStore {
       streams: Map[String, Long] = Map.empty,
       colmaps: Map[String, String] = Map.empty,
       checks: Map[String, (Long, Long)] = Map.empty,
-      op: Option[String] = None)
+      op: Option[String] = None,
+      stats: Map[String, FileStats] = Map.empty)
       : String = {
     // `#ts` header = in-commit timestamp (Delta's ICT shape): time
     // travel by timestamp must not depend on FS mtimes surviving
@@ -1068,10 +1187,13 @@ object DocStore {
       .map { case (p, l) => s"#colmap\t$p\t$l" }
     val checkLines = checks.toSeq.sortBy(_._1)
       .map { case (c, (mn, mx)) => s"#check\t$c\t$mn\t$mx" }
+    val statsLines = stats.toSeq
+      .filter { case (n, _) => names.contains(n) }
+      .sortBy(_._1).map { case (n, st) => statsLine(n, st) }
     ((s"#ts\t$commitTs" +:
       (op.toSeq.map(o => s"#op\t$o") ++
         schemaLines ++ kdLines ++ dvLines ++ bloomLines ++ partLines ++
-        streamLines ++ colmapLines ++ checkLines)) ++
+        statsLines ++ streamLines ++ colmapLines ++ checkLines)) ++
       files.map { case (f, len) => s"${storedName(dir, f)}\t$len" })
       .mkString("", "\n", "\n")
   }
@@ -1089,7 +1211,8 @@ object DocStore {
       streams: Map[String, Long] = Map.empty,
       colmaps: Map[String, String] = Map.empty,
       checks: Map[String, Option[(Long, Long)]] = Map.empty,
-      op: Option[String] = None)
+      op: Option[String] = None,
+      stats: Map[String, FileStats] = Map.empty)
       : String = {
     def nameOf(f: String): String = new Path(f).getName
     // file LINES use the stored form (name, or absolute for external
@@ -1128,6 +1251,11 @@ object DocStore {
     val partSets = parts.toSeq.filter { case (n, t) =>
       newMetaNames.contains(n) && !base.parts.get(n).contains(t)
     }.sortBy(_._1)
+    // a file's stats never change: they travel with its add line only
+    val statsSets = adds.flatMap { case (n, _) =>
+      val meta = nameOf(n)
+      stats.get(meta).map(statsLine(meta, _))
+    }
     val streamSets = streams.toSeq.filter { case (q, e) =>
       !base.streams.get(q).contains(e)
     }.sortBy(_._1)
@@ -1150,6 +1278,7 @@ object DocStore {
       bloomSets.map { case ((n, c), b) => s"#bloom\t$n\t$c\t$b" } ++
       bloomDrops.map { case (n, c) => s"#bloom-\t$n\t$c" } ++
       partSets.map { case (n, t) => partLine(n, t) } ++
+      statsSets ++
       adds.map { case (n, len) => s"+\t$n\t$len" } ++
       removes.map(n => s"-\t$n")).mkString("", "\n", "\n")
   }
@@ -1176,7 +1305,8 @@ object DocStore {
       ref: Option[String] = None,
       colmaps: Map[String, String] = Map.empty,
       checks: Map[String, Option[(Long, Long)]] = Map.empty,
-      op: Option[String] = None)
+      op: Option[String] = None,
+      stats: Map[String, FileStats] = Map.empty)
       : Boolean = {
     // the op name is a single tab-framed header token — a tab or
     // newline in a caller-supplied `operation` option would corrupt
@@ -1214,11 +1344,15 @@ object DocStore {
       }
       m.toMap
     }
+    // a file's stats never change, so every file the parent describes
+    // keeps its stats: callers pass only those of files the parent
+    // does not list (the full bodies below keep the live ones)
+    val effStats = parent.map(_.stats ++ stats).getOrElse(stats)
     val body = parent match {
       case Some(b) => deltaBody(dir, b, files, commitTs, dvs, keyDomain,
-        blooms, schemaDdl, parts, streams, colmaps, checks, op)
+        blooms, schemaDdl, parts, streams, colmaps, checks, op, effStats)
       case None => fullBody(dir, files, commitTs, dvs, keyDomain, blooms,
-        schemaDdl, parts, effStreams, effColmaps, effChecks, op)
+        schemaDdl, parts, effStreams, effColmaps, effChecks, op, effStats)
     }
     val tmp = new Path(dir,
       s"$finName.tmp-${java.util.UUID.randomUUID()}")
@@ -1230,7 +1364,8 @@ object DocStore {
     // shadow main's own fold base for every reader
     if (won && ref.isEmpty && v % CheckpointInterval == 0L)
       writeCheckpoint(dir, v, fullBody(dir, files, commitTs, dvs, keyDomain,
-        blooms, schemaDdl, parts, effStreams, effColmaps, effChecks, op))
+        blooms, schemaDdl, parts, effStreams, effColmaps, effChecks, op,
+        effStats))
     won
   }
 
@@ -1512,7 +1647,7 @@ object DocStore {
         val sn = readSnapshot(dir, fl)
         writeCheckpoint(dir, fl, fullBody(dir, sn.files, commitTimestamp(dir, fl),
           sn.dvs, sn.keyDomain, sn.blooms, sn.schemaDdl, sn.parts,
-          sn.streams, sn.colmaps, sn.checks))
+          sn.streams, sn.colmaps, sn.checks, stats = sn.stats))
       }
       val branchSnaps = branchNames(dir).flatMap { b =>
         branchLatest(dir, b).map(t => readSnapshot(dir, t, Some(b)))
@@ -1560,8 +1695,9 @@ object DocStore {
 
 
   /** File-level min/max of a column from block headers only — the
-    * Iceberg-manifest-style metadata read behind [[DocStoreOps.merge]]'s
-    * affected-file pruning: block stats are aggregated without decoding
+    * metadata read behind [[DocStoreOps.addCheck]]'s validation and,
+    * for files whose manifest carries no `#stats` line,
+    * [[DocStoreOps.merge]]'s affected-file pruning: block stats are aggregated without decoding
     * a single column chunk (chunks are `skip`'d wholesale), so the cost
     * is O(blocks), not O(rows). None when no block carries stats for
     * the column (all-null or non-numeric) — callers must treat such a
@@ -2103,7 +2239,7 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
     // non-null stored value was added to the writer's Bloom and
     // equality never matches null.
     val blooms = snapOpt.map(_.blooms).getOrElse(Map.empty)
-    val planned =
+    val bloomKept =
       if (blooms.isEmpty || pushed.isEmpty) partPruned
       else {
         def dtOf(c: String) = fullSchema.fields.find(_.name == c).map(_.dataType)
@@ -2132,14 +2268,53 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
         DocStore.filesBloomSkipped.add(partPruned.size - kept.size)
         kept
       }
+    // file-level stats pruning, LAST so the partition and Bloom
+    // counters see the same files as without stats: a file whose
+    // manifest range for a filtered column cannot satisfy the filter
+    // is never planned. Files with no `#stats` line (older manifests)
+    // and columns with no range are kept. Their blocks count as
+    // skipped — the block counters then mean the same with or without
+    // this gate.
+    val fileStats = snapOpt.map(_.stats).getOrElse(Map.empty)
+    val statsKept =
+      if (fileStats.isEmpty || pushed.isEmpty) bloomKept
+      else {
+        def mayMatch(st: DocStore.FileStats): Boolean = pushed.forall { flt =>
+          DocStore.filterColumn(flt).forall { c =>
+            aliases(c).flatMap(st.cols.get).headOption
+              .forall(DocStore.rangeMayMatch(flt, _))
+          }
+        }
+        val (kept, dropped) = bloomKept.partition { case (f, _) =>
+          fileStats.get(new Path(f).getName).forall(mayMatch)
+        }
+        DocStore.blocksSkipped.add(dropped.map { case (f, _) =>
+          fileStats(new Path(f).getName).blocks }.sum)
+        kept
+      }
+    val pruning = DocStoreScanPruning(subset.size, subset.size - partPruned.size,
+      partPruned.size - bloomKept.size, bloomKept.size - statsKept.size)
     val dvs = snapOpt.map(_.dvs).getOrElse(Map.empty)
     if (pushedAgg.nonEmpty)
-      new DocStoreAggScan(dir, planned, dvs, pushedAgg, fullSchema)
+      new DocStoreAggScan(dir, statsKept, dvs, pushedAgg, fullSchema)
     else
-      new DocStoreScan(dir, fullSchema, required, pushed, planned,
+      new DocStoreScan(dir, fullSchema, required, pushed, statsKept,
         ignoreChanges, dvs, colmaps,
-        if (reportPartitioning) Some(partsMeta) else None)
+        if (reportPartitioning) Some(partsMeta) else None, pruning)
   }
+}
+
+/** What scan planning dropped: of `candidates` snapshot files (after
+  * the `files` read option), how many partition, Bloom and stats
+  * pruning removed, in that order. Shown in the scan's description, so
+  * EXPLAIN and the executed plan report pruning per scan.
+  */
+case class DocStoreScanPruning(candidates: Int, partition: Int, bloom: Int,
+    stats: Int) {
+  def planned: Int = candidates - partition - bloom - stats
+  override def toString: String =
+    s"files=$planned/$candidates (partition $partition, bloom $bloom, " +
+      s"stats $stats)"
 }
 
 /** One pushed aggregate: op ∈ count / min / max, col empty for count. */
@@ -2246,7 +2421,8 @@ class DocStoreScan(
     ignoreChanges: Boolean = false,
     dvs: Map[String, String] = Map.empty,
     colmaps: Map[String, String] = Map.empty,
-    partsMeta: Option[Map[String, Seq[(String, Option[String])]]] = None)
+    partsMeta: Option[Map[String, Seq[(String, Option[String])]]] = None,
+    pruning: DocStoreScanPruning)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning {
 
@@ -2320,7 +2496,7 @@ class DocStoreScan(
 
   override def description(): String =
     s"docstore $dir, PushedFilters: [${pushed.mkString(", ")}], " +
-      s"ReadSchema: ${required.catalogString}"
+      s"ReadSchema: ${required.catalogString}, $pruning"
 
   override def planInputPartitions(): Array[InputPartition] =
     spjLayout match {
@@ -2807,7 +2983,8 @@ class DocStoreStreamingWrite(dir: String, schema: StructType,
           base = snapNow,
           parts = snapNow.map(_.parts).getOrElse(Map.empty) ++ newParts,
           streams = Map(queryId -> epochId),
-          op = Some("stream"))
+          op = Some("stream"),
+          stats = DocStoreFileCommit.statsOf(fileCommits))
       }
     }
   }
@@ -2834,15 +3011,23 @@ class DocStoreStreamingWriterFactory(dir: String, schemaDdl: String,
       taskId, s"$jobToken-e$epochId", bloomCols, partitionCols)
 }
 
-/** One output file of a write task: `blooms` = (column → base64 Bloom
-  * bits) for the writers asked (via `bloomCols`) to index their
-  * output; `parts` = the identity-partition tuple this file carries
-  * (empty for unpartitioned writes). A task emits ONE file per
+/** One output file of a write task: `stats` = the file's row count and
+  * per-column ranges, folded from its block stats; `blooms` = (column →
+  * base64 Bloom bits) for the writers asked (via `bloomCols`) to index
+  * their output; `parts` = the identity-partition tuple this file
+  * carries (empty for unpartitioned writes). A task emits ONE file per
   * distinct partition tuple it saw (r17).
   */
 case class DocStoreFileCommit(tmpPath: String, finalPath: String,
+    stats: DocStore.FileStats,
     blooms: Seq[(String, String)] = Seq.empty,
     parts: Seq[(String, Option[String])] = Seq.empty)
+
+object DocStoreFileCommit {
+  /** File name → stats of the files a job committed. */
+  def statsOf(fcs: Seq[DocStoreFileCommit]): Map[String, DocStore.FileStats] =
+    fcs.map(fc => new Path(fc.finalPath).getName -> fc.stats).toMap
+}
 
 case class DocStoreCommitMessage(files: Seq[DocStoreFileCommit])
     extends WriterCommitMessage
@@ -2965,6 +3150,7 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
         case fc if fc.parts.nonEmpty =>
           new Path(fc.finalPath).getName -> fc.parts
       }.toMap
+    val newStats = DocStoreFileCommit.statsOf(fileCommits)
     val newNames = newFiles.map { case (f, _) => new Path(f).getName }.toSet
     var committed = false
     while (!committed) {
@@ -3021,26 +3207,23 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
           "or dropped; their physical names are reserved — write under " +
           "the current logical schema")
       // CHECK constraints (r17 wave 2): every commit proves its OWN
-      // new files against the table's declared ranges from their
-      // block-stat headers — O(new files) header reads, no chunk
-      // decoded. Stats absent = no non-null values for the column =
-      // vacuously true (SQL CHECK semantics: NULL passes). A
+      // new files against the table's declared ranges from the stats
+      // their writers folded from the block headers — no file opened,
+      // no chunk decoded. Stats absent = no non-null values for the
+      // column = vacuously true (SQL CHECK semantics: NULL passes). A
       // violation aborts the whole commit and cleans up — the table
       // never holds a row the constraint forbids.
       val activeChecks = snapNow.map(_.checks).getOrElse(Map.empty)
       if (activeChecks.nonEmpty) {
         val bad = for {
           (c, (mn, mx)) <- activeChecks.toSeq
-          (f, _) <- newFiles
-          st <- DocStore.fileColumnStats(f, c).toSeq
-          if (st match {
-            case (a: Long, b: Long) => a < mn || b > mx
-            case (a: Double, b: Double) =>
-              a < mn.toDouble || b > mx.toDouble
-            case _ => false
-          })
-        } yield s"$c in [${st._1}, ${st._2}] outside [$mn, $mx] " +
-          s"(${new Path(f).getName})"
+          (n, st) <- newStats.toSeq.sortBy(_._1)
+          (lo, hi) <- st.cols.get(c).collect {
+            case DocStore.LongRange(a, b) if a < mn || b > mx => (a, b)
+            case DocStore.DoubleRange(a, b)
+                if a < mn.toDouble || b > mx.toDouble => (a, b)
+          }.toSeq
+        } yield s"$c in [$lo, $hi] outside [$mn, $mx] ($n)"
         if (bad.nonEmpty) {
           newFiles.foreach { case (f, _) => fs.delete(new Path(f), false) }
           throw new IllegalArgumentException(
@@ -3151,7 +3334,7 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
       committed = DocStore.writeManifest(dir, v, base ++ newFiles,
         commitTs.getOrElse(System.currentTimeMillis()), dvs, keyDomain,
         blooms, Some(schema.toDDL), base = snapNow, parts = parts,
-        ref = ref, op = Some(opName))
+        ref = ref, op = Some(opName), stats = newStats)
     }
   }
 
@@ -3268,6 +3451,10 @@ class DocStoreDataWriter(
     }
 
     private val buffer = new ArrayBuffer[Array[Any]]()
+    // the fold of this file's block stats: per column, the range over
+    // every block that carried one (null = none yet)
+    private val fileRanges = new Array[DocStore.ColRange](schema.length)
+    private var fileRows = 0L
 
     // per-column Bloom accumulators for the columns the writer was
     // asked to index (bloomCols write option)
@@ -3352,28 +3539,44 @@ class DocStoreDataWriter(
       ci = 0
       while (ci < schema.length) {
         val nonNull = buffer.iterator.map(_(ci)).filter(_ != null).toSeq
-        schema.fields(ci).dataType match {
-          case LongType if nonNull.nonEmpty =>
-            val ls = nonNull.map(_.asInstanceOf[Long])
-            out.writeByte(1); out.writeLong(ls.min); out.writeLong(ls.max)
-          case DoubleType if nonNull.nonEmpty =>
-            val ds = nonNull.map(_.asInstanceOf[Double])
-            out.writeByte(2); out.writeDouble(ds.min); out.writeDouble(ds.max)
-          case StringType if nonNull.nonEmpty =>
-            // tag 3: unsigned min/max of the packed 8-byte UTF-8 prefix
-            // (equality-shaped pruning; see blockMayMatchString)
-            val ps = nonNull.map(str =>
-              DocStore.packPrefix(str.asInstanceOf[String]))
-            out.writeByte(3)
-            out.writeLong(ps.reduce((a, b) =>
-              if (java.lang.Long.compareUnsigned(a, b) <= 0) a else b))
-            out.writeLong(ps.reduce((a, b) =>
-              if (java.lang.Long.compareUnsigned(a, b) >= 0) a else b))
-          case _ => out.writeByte(0)
+        val range: Option[DocStore.ColRange] =
+          if (nonNull.isEmpty) None
+          else schema.fields(ci).dataType match {
+            case LongType =>
+              val ls = nonNull.map(_.asInstanceOf[Long])
+              Some(DocStore.LongRange(ls.min, ls.max))
+            case DoubleType =>
+              val ds = nonNull.map(_.asInstanceOf[Double])
+              Some(DocStore.DoubleRange(ds.min, ds.max))
+            case StringType =>
+              // tag 3: unsigned min/max of the packed 8-byte UTF-8
+              // prefix (equality-shaped pruning; see blockMayMatchString)
+              val ps = nonNull.map(str =>
+                DocStore.packPrefix(str.asInstanceOf[String]))
+              Some(DocStore.PrefixRange(
+                ps.reduce((a, b) =>
+                  if (java.lang.Long.compareUnsigned(a, b) <= 0) a else b),
+                ps.reduce((a, b) =>
+                  if (java.lang.Long.compareUnsigned(a, b) >= 0) a else b)))
+            case _ => None
+          }
+        range match {
+          case Some(DocStore.LongRange(a, b)) =>
+            out.writeByte(1); out.writeLong(a); out.writeLong(b)
+          case Some(DocStore.DoubleRange(a, b)) =>
+            out.writeByte(2); out.writeDouble(a); out.writeDouble(b)
+          case Some(DocStore.PrefixRange(a, b)) =>
+            out.writeByte(3); out.writeLong(a); out.writeLong(b)
+          case None => out.writeByte(0)
+        }
+        range.foreach { r =>
+          fileRanges(ci) =
+            if (fileRanges(ci) == null) r else DocStore.widen(fileRanges(ci), r)
         }
         out.writeInt(chunks(ci).length)
         ci += 1
       }
+      fileRows += rows
       ci = 0
       while (ci < schema.length) { out.write(chunks(ci)); ci += 1 }
       buffer.clear()
@@ -3383,6 +3586,10 @@ class DocStoreDataWriter(
       flushBlock()
       out.close()
       DocStoreFileCommit(tmpPath, finalPath,
+        DocStore.FileStats(fileRows,
+          schema.fieldNames.zip(fileRanges).collect {
+            case (c, r) if r != null => c -> r
+          }.toMap),
         bloomAcc.map { case (c, _, bits) => (c, DocStore.bloomEncode(bits)) },
         parts)
     }

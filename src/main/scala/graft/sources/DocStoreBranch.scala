@@ -146,7 +146,8 @@ object DocStoreBranch {
         commitTs.getOrElse(System.currentTimeMillis()), dvs,
         branchSnap.keyDomain, blooms,
         branchSnap.schemaDdl.orElse(mainSnap.schemaDdl),
-        base = Some(mainSnap), parts = parts, op = Some("publish"))
+        base = Some(mainSnap), parts = parts, op = Some("publish"),
+        stats = branchSnap.stats)
       if (won) published = latest + 1
     }
     published

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** Table-maintenance operations on the `docstore` DSv2 source — the
   * lakehouse primitives a 100 TB corpus store runs daily on top of the
@@ -32,59 +32,110 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * [[DocStore.vacuum]].
   *
   * SCALE CONTRACT: driver-side work is file-count-sized, never
-  * row-sized — affected-file detection broadcasts the (file, min, max)
-  * key-range table (block-header metadata only, no chunks decoded) and
-  * joins it against the distributed batch; the only collect is the
-  * distinct affected FILE NAMES. The rewrite itself is a distributed
-  * anti-join + union + write.
+  * row-sized — affected-file detection takes each file's key range
+  * from the manifest's `#stats` line. A key set of at most
+  * [[MaxDriverKeys]] rows is collected once and tested against those
+  * ranges on the driver, with no Spark job. A larger one stays
+  * distributed: the (file, min, max) range table is broadcast and
+  * joined against it, and the only collect is the distinct affected
+  * FILE NAMES. The rewrite itself is a distributed anti-join + union +
+  * write.
   */
 object DocStoreOps {
 
-  /** Metadata-only affected-file detection shared by [[merge]] and
-    * [[delete]]: per-file [min, max] of `key` from block headers
-    * (no chunks decoded); a file with no stats (empty/all-null) is
-    * conservatively affected. The file-range table is metadata-small →
-    * broadcast; `keys` stays distributed; the only collect is bounded
-    * by the FILE count.
+  /** The largest key set [[merge]] and [[delete]] handle on the driver
+    * (the same bound as merge's exact `keyDomainKeys`).
     */
-  private def affectedFiles(spark: SparkSession, dir: String, v: Long,
-      keys: DataFrame, key: String): Set[String] = {
-    val files = DocStore.readManifest(dir, v)
-    val withStats = files.map { case (f, _) =>
-      (new Path(f).getName, DocStore.fileColumnStats(f, key))
+  val MaxDriverKeys: Int = 256
+
+  /** The distinct non-null keys of `keys`, when it holds at most
+    * [[MaxDriverKeys]] non-null key rows: ONE bounded collect, which a
+    * local batch answers without a Spark job. None for a larger frame
+    * or a non-integral key, which stay on the distributed path.
+    */
+  private[graft] def driverKeys(keys: DataFrame,
+      key: String): Option[Seq[Long]] = {
+    val k = keys.select(col(key))
+    k.schema.head.dataType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        val rows = k.select(col(key).cast(LongType)).na.drop()
+          .limit(MaxDriverKeys + 1).collect()
+        if (rows.length > MaxDriverKeys) None
+        else Some(rows.map(_.getLong(0)).distinct.sorted.toSeq)
+      case _ => None
+    }
+  }
+
+  /** Metadata-only affected-file detection shared by [[merge]] and
+    * [[delete]]: per-file [min, max] of `key` from the manifest's
+    * `#stats` lines, or from block headers for files an older manifest
+    * carries no stats for (no chunks decoded either way); a file with
+    * no BIGINT range (empty/all-null, or a non-integral key) is
+    * conservatively affected. With the keys on the driver (`known`,
+    * sorted) each range is a binary search, and no Spark job runs.
+    * Otherwise the file-range table is metadata-small → broadcast;
+    * `keys` stays distributed; the only collect is bounded by the FILE
+    * count.
+    */
+  private[graft] def affectedFiles(spark: SparkSession, sn: DocStore.Snapshot,
+      keys: DataFrame, key: String, known: Option[Seq[Long]]): Set[String] = {
+    val withStats = sn.files.map { case (f, _) =>
+      val n = new Path(f).getName
+      n -> (sn.stats.get(n) match {
+        case Some(st) =>
+          st.cols.get(key).collect { case DocStore.LongRange(mn, mx) => (mn, mx) }
+        case None =>
+          DocStore.fileColumnStats(f, key).collect { case (mn: Long, mx: Long) => (mn, mx) }
+      })
     }
     val statless = withStats.collect { case (n, None) => n }
-    val ranges = withStats.collect { case (n, Some((mn: Long, mx: Long))) =>
-      Row(n, mn, mx)
+    val ranges = withStats.collect { case (n, Some((mn, mx))) => (n, mn, mx) }
+    val hit = known match {
+      case Some(ks) =>
+        val sorted = ks.toArray
+        ranges.collect { case (n, mn, mx) if {
+          // first key >= mn, then is it <= mx?
+          val i = java.util.Arrays.binarySearch(sorted, mn)
+          val at = if (i >= 0) i else -i - 1
+          at < sorted.length && sorted(at) <= mx
+        } => n }
+      case None =>
+        val rangeDf = spark.createDataFrame(
+          spark.sparkContext.parallelize(ranges.map(Row.fromTuple), 1),
+          StructType(Seq(StructField("file", StringType, nullable = false),
+            StructField("kmin", LongType, nullable = false),
+            StructField("kmax", LongType, nullable = false))))
+        keys.select(col(key).as("mk")).distinct()
+          .join(broadcast(rangeDf),
+            col("mk") >= col("kmin") && col("mk") <= col("kmax"))
+          .select("file").distinct().collect().map(_.getString(0)).toSeq
     }
-    val rangeDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(ranges, 1),
-      StructType(Seq(StructField("file", StringType, nullable = false),
-        StructField("kmin", LongType, nullable = false),
-        StructField("kmax", LongType, nullable = false))))
-    val hit = keys.select(col(key).as("mk")).distinct()
-      .join(broadcast(rangeDf),
-        col("mk") >= col("kmin") && col("mk") <= col("kmax"))
-      .select("file").distinct().collect().map(_.getString(0))
     (hit ++ statless).toSet
   }
 
-  /** Columns any file of snapshot `v` carries a Bloom index for —
+  /** Columns any file of snapshot `sn` carries a Bloom index for —
     * copy-on-write rewrites re-declare them on their own output so
     * table maintenance never silently degrades point-lookup pruning.
     */
-  private def bloomedCols(dir: String, v: Long): String =
-    DocStore.readBloomMap(dir, v).keys.map(_._2).toSeq.distinct.sorted
-      .mkString(",")
+  private def bloomedCols(sn: DocStore.Snapshot): String =
+    sn.blooms.keys.map(_._2).toSeq.distinct.sorted.mkString(",")
 
-  /** Identity-partition columns any file of snapshot `v` declares —
+  /** Identity-partition columns any file of snapshot `sn` declares —
     * copy-on-write rewrites re-declare them (like [[bloomedCols]]) so
     * maintenance never silently collapses a partitioned layout into
     * unprunable files.
     */
-  private def partitionedCols(dir: String, v: Long): String =
-    DocStore.readSnapshot(dir, v).parts.values
-      .flatMap(_.map(_._1)).toSeq.distinct.sorted.mkString(",")
+  private def partitionedCols(sn: DocStore.Snapshot): String =
+    sn.parts.values.flatMap(_.map(_._1)).toSeq.distinct.sorted.mkString(",")
+
+  /** Key-domain Bloom over an exact key set. */
+  private def keyBloom(ks: Iterator[Long]): Array[Long] = {
+    val bits = new Array[Long](DocStore.BloomBits / 64)
+    ks.foreach { k =>
+      DocStore.bloomAdd(bits, java.nio.ByteBuffer.allocate(8).putLong(k).array())
+    }
+    bits
+  }
 
   /** MERGE `batch` into the docstore table at `dir` on long key `key`:
     * rows whose key matches an existing row replace it; the rest
@@ -110,7 +161,11 @@ object DocStoreOps {
     // domain overlap) run against exactly what this merge saw
     val v0 = DocStore.latestVersion(dir).getOrElse(
       throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val affected = affectedFiles(spark, dir, v0, batch, key)
+    val sn = DocStore.readSnapshot(dir, v0)
+    // a small batch's keys come to the driver once and decide the
+    // affected files, the key domain and its Bloom — no Spark job
+    val known = driverKeys(batch, key)
+    val affected = affectedFiles(spark, sn, batch, key, known)
     val baseCols = spark.read.format("docstore").load(dir).columns
     val extraCols = batch.columns.filterNot(baseCols.contains).toSeq
     require(evolveSchema || extraCols.isEmpty,
@@ -120,44 +175,40 @@ object DocStoreOps {
     // order — the same left-to-right ADD discipline q_docstore_evolve
     // established
     val tableCols = baseCols ++ extraCols
-    // the batch's key range = this commit's declared domain (one 1-row
-    // agg over the batch): two racing merges with overlapping domains
-    // are not serializable even when they touch disjoint files — the
-    // loser must abort, not land a duplicate key (VERDICT r15 #7)
-    val kd = batch.agg(min(col(key)), max(col(key))).collect()(0)
+    // the batch's key range = this commit's declared domain: two
+    // racing merges with overlapping domains are not serializable even
+    // when they touch disjoint files — the loser must abort, not land
+    // a duplicate key (VERDICT r15 #7)
     // r17 (VERDICT r16 #5): the domain also carries a Bloom over the
     // EXACT key set — successors can then PROVE a sparse racer
     // disjoint instead of aborting on envelope overlap. Small batches
     // (≤256 distinct keys — the takedown/upsert-trickle shape this
     // precision exists for) also keep the exact keys in-process for
-    // the sharper per-key probe; large batches fold the Bloom
-    // distributed (one 1-KiB result row, never a row-sized collect).
+    // the sharper per-key probe; large batches fold the range and the
+    // Bloom distributed (1-row results, never a row-sized collect).
     import spark.implicits._
-    val distinctKeys = batch.select(col(key)).na.drop().distinct()
-    val keySample = distinctKeys.limit(257).as[Long].collect()
-    val (exactKeys, kdBloom) =
-      if (keySample.length <= 256) {
-        val bits = new Array[Long](DocStore.BloomBits / 64)
-        keySample.foreach { k =>
-          DocStore.bloomAdd(bits,
-            java.nio.ByteBuffer.allocate(8).putLong(k).array())
-        }
-        (Some(keySample.toSeq), DocStore.bloomEncode(bits))
-      } else {
-        val bits = distinctKeys.as[Long].mapPartitions { it =>
-          val b = new Array[Long](DocStore.BloomBits / 64)
-          it.foreach { k =>
-            DocStore.bloomAdd(b,
-              java.nio.ByteBuffer.allocate(8).putLong(k).array())
+    val (keyRange, exactKeys, kdBloom) = known match {
+      case Some(ks) =>
+        (ks.headOption.map(lo => (lo, ks.last)), Some(ks),
+          DocStore.bloomEncode(keyBloom(ks.iterator)))
+      case None =>
+        val kd = batch.agg(min(col(key)), max(col(key))).collect()(0)
+        val distinctKeys = batch.select(col(key)).na.drop().distinct()
+        val keySample = distinctKeys.limit(MaxDriverKeys + 1).as[Long].collect()
+        if (keySample.length <= MaxDriverKeys)
+          (Option.when(!kd.isNullAt(0))((kd.getLong(0), kd.getLong(1))),
+            Some(keySample.toSeq), DocStore.bloomEncode(keyBloom(keySample.iterator)))
+        else {
+          val bits = distinctKeys.as[Long].mapPartitions { it =>
+            Iterator(keyBloom(it))
+          }.reduce { (a, b) =>
+            var i = 0
+            while (i < a.length) { a(i) |= b(i); i += 1 }
+            a
           }
-          Iterator(b)
-        }.reduce { (a, b) =>
-          var i = 0
-          while (i < a.length) { a(i) |= b(i); i += 1 }
-          a
+          (Some((kd.getLong(0), kd.getLong(1))), None, DocStore.bloomEncode(bits))
         }
-        (None, DocStore.bloomEncode(bits))
-      }
+    }
     val out =
       if (affected.isEmpty) batch.select(tableCols.map(col).toSeq: _*)
       else {
@@ -171,17 +222,18 @@ object DocStoreOps {
       }
     val w = out.write.format("docstore").mode("append")
       .option("replaceFiles", affected.mkString(","))
-      .option("bloomCols", bloomedCols(dir, v0))
-      .option("partitionCols", partitionedCols(dir, v0))
+      .option("bloomCols", bloomedCols(sn))
+      .option("partitionCols", partitionedCols(sn))
       .option("readVersion", v0.toString)
       .option("operation", "merge")
-    (if (kd.isNullAt(0)) w
-     else {
-       val w2 = w.option("keyDomain", s"$key,${kd.getLong(0)},${kd.getLong(1)}")
-         .option("keyDomainBloom", kdBloom)
-       exactKeys.fold(w2)(ks =>
-         w2.option("keyDomainKeys", ks.mkString(",")))
-     })
+    (keyRange match {
+      case None => w
+      case Some((lo, hi)) =>
+        val w2 = w.option("keyDomain", s"$key,$lo,$hi")
+          .option("keyDomainBloom", kdBloom)
+        exactKeys.fold(w2)(ks =>
+          w2.option("keyDomainKeys", ks.mkString(",")))
+    })
       .save(dir)
   }
 
@@ -196,7 +248,8 @@ object DocStoreOps {
       key: String): Unit = {
     val v0 = DocStore.latestVersion(dir).getOrElse(
       throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val affected = affectedFiles(spark, dir, v0, keys, key)
+    val sn = DocStore.readSnapshot(dir, v0)
+    val affected = affectedFiles(spark, sn, keys, key, driverKeys(keys, key))
     if (affected.isEmpty) return
     val tableCols = spark.read.format("docstore").load(dir).columns
     val touched = spark.read.format("docstore")
@@ -210,8 +263,8 @@ object DocStoreOps {
       .select(tableCols.map(col).toSeq: _*)
       .write.format("docstore").mode("append")
       .option("replaceFiles", affected.mkString(","))
-      .option("bloomCols", bloomedCols(dir, v0))
-      .option("partitionCols", partitionedCols(dir, v0))
+      .option("bloomCols", bloomedCols(sn))
+      .option("partitionCols", partitionedCols(sn))
       .option("readVersion", v0.toString)
       .option("operation", "delete")
       .save(dir)
@@ -234,8 +287,8 @@ object DocStoreOps {
       files: Int): Unit = {
     val v = DocStore.latestVersion(dir).getOrElse(
       throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val all = DocStore.readManifest(dir, v)
-      .map { case (f, _) => new Path(f).getName }
+    val sn = DocStore.readSnapshot(dir, v)
+    val all = sn.files.map { case (f, _) => new Path(f).getName }
     val df = spark.read.format("docstore")
       .option("snapshotVersion", v.toString).load(dir)
     val cols = df.columns
@@ -256,8 +309,8 @@ object DocStoreOps {
       .select(cols.map(col).toSeq: _*)
       .write.format("docstore").mode("append")
       .option("replaceFiles", all.mkString(","))
-      .option("bloomCols", bloomedCols(dir, v))
-      .option("partitionCols", partitionedCols(dir, v))
+      .option("bloomCols", bloomedCols(sn))
+      .option("partitionCols", partitionedCols(sn))
       .option("readVersion", v.toString)
       .option("operation", "zorder")
       .save(dir)
@@ -358,7 +411,8 @@ object DocStoreOps {
     var v = DocStore.latestVersion(dir).getOrElse(0L) + 1
     while (!DocStore.writeManifest(dir, v, sn.files, dvs = sn.dvs,
         op = Some("restore"),
-        blooms = sn.blooms, schemaDdl = sn.schemaDdl)) v += 1
+        blooms = sn.blooms, schemaDdl = sn.schemaDdl, parts = sn.parts,
+        stats = sn.stats)) v += 1
     v
   }
 
@@ -386,9 +440,10 @@ object DocStoreOps {
       key: String): Unit = {
     val v0 = DocStore.latestVersion(dir).getOrElse(
       throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val affected = affectedFiles(spark, dir, v0, keys, key)
+    val sn0 = DocStore.readSnapshot(dir, v0)
+    val affected = affectedFiles(spark, sn0, keys, key, driverKeys(keys, key))
     if (affected.isEmpty) return
-    val dv0 = DocStore.readDvMap(dir, v0)
+    val dv0 = sn0.dvs
     val token = java.util.UUID.randomUUID().toString.take(8)
     import spark.implicits._
     val dirB = dir
@@ -451,7 +506,8 @@ object DocStoreOps {
     */
   def materializeDvs(spark: SparkSession, dir: String): Unit = {
     val v = DocStore.latestVersion(dir).getOrElse(return)
-    val dvs = DocStore.readDvMap(dir, v)
+    val sn = DocStore.readSnapshot(dir, v)
+    val dvs = sn.dvs
     if (dvs.isEmpty) return
     val names = dvs.keys.toSeq.sorted
     val tableCols = spark.read.format("docstore").load(dir).columns
@@ -462,8 +518,8 @@ object DocStoreOps {
       .select(tableCols.map(col).toSeq: _*)
       .write.format("docstore").mode("append")
       .option("replaceFiles", names.mkString(","))
-      .option("bloomCols", bloomedCols(dir, v))
-      .option("partitionCols", partitionedCols(dir, v))
+      .option("bloomCols", bloomedCols(sn))
+      .option("partitionCols", partitionedCols(sn))
       .option("readVersion", v.toString)
       .option("operation", "purge")
       .save(dir)
@@ -499,7 +555,7 @@ object DocStoreOps {
       dvs = absDvs, blooms = sn.blooms, schemaDdl = sn.schemaDdl,
       parts = sn.parts, colmaps = sn.colmaps,
       checks = sn.checks.map { case (c, r) => c -> Some(r) },
-      op = Some("clone"))
+      op = Some("clone"), stats = sn.stats)
     if (!won) throw new java.util.ConcurrentModificationException(
       s"docstore: clone target $dstDir was created concurrently")
     1L
@@ -553,9 +609,10 @@ object DocStoreOps {
       s"docstore: minMaskedRatio out of [0,1]: $minMaskedRatio")
     val v = DocStore.latestVersion(dir).getOrElse(
       throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val dvs = DocStore.readDvMap(dir, v)
+    val sn = DocStore.readSnapshot(dir, v)
+    val dvs = sn.dvs
     if (dvs.isEmpty) return (0, 0)
-    val byName = DocStore.readManifest(dir, v)
+    val byName = sn.files
       .map { case (f, len) => new org.apache.hadoop.fs.Path(f).getName -> f }
       .toMap
     val heavy = dvs.toSeq.sortBy(_._1).filter { case (name, dv) =>
@@ -573,8 +630,8 @@ object DocStoreOps {
       .select(tableCols.map(col).toSeq: _*)
       .write.format("docstore").mode("append")
       .option("replaceFiles", heavy.mkString(","))
-      .option("bloomCols", bloomedCols(dir, v))
-      .option("partitionCols", partitionedCols(dir, v))
+      .option("bloomCols", bloomedCols(sn))
+      .option("partitionCols", partitionedCols(sn))
       .option("readVersion", v.toString)
       .option("operation", "purge")
       .save(dir)
@@ -590,7 +647,8 @@ object DocStoreOps {
       targetBytes: Long): (Int, Int) = {
     val v = DocStore.latestVersion(dir).getOrElse(
       throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val files = DocStore.readManifest(dir, v)
+    val sn = DocStore.readSnapshot(dir, v)
+    val files = sn.files
     val small = files.filter(_._2 < targetBytes)
     if (small.size <= 1) return (files.size, files.size)
     val names = small.map { case (f, _) => new Path(f).getName }
@@ -603,8 +661,8 @@ object DocStoreOps {
       .repartition(bins)
       .write.format("docstore").mode("append")
       .option("replaceFiles", names.mkString(","))
-      .option("bloomCols", bloomedCols(dir, v))
-      .option("partitionCols", partitionedCols(dir, v))
+      .option("bloomCols", bloomedCols(sn))
+      .option("partitionCols", partitionedCols(sn))
       .option("readVersion", v.toString)
       .option("operation", "compact")
       .save(dir)
