@@ -1558,8 +1558,9 @@ object DocStoreQueries {
       // after the purge bind only to non-de files, and some light mask
       // is actually still there
       val v = graft.sources.DocStore.latestVersion(outDir).get
-      val dvAfter = graft.sources.DocStore.readDvMap(outDir, v)
-      val parts = graft.sources.DocStore.readSnapshot(outDir, v).parts
+      val snap = graft.sources.DocStore.readSnapshot(outDir, v)
+      val dvAfter = snap.dvs
+      val parts = snap.parts
       def langOf(name: String): Option[String] =
         parts.get(name).flatMap(_.collectFirst {
           case ("lang", vOpt) => vOpt

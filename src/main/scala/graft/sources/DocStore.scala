@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.LongAdder
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -65,6 +65,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * ONE manifest (latest, or the `snapshotVersion` read option), so a
   * reader of version N is untouched by version N+1 committing under
   * it. Truncate defers physical deletion to [[DocStore.vacuum]].
+  *
+  * Commit model: every table change — batch and streaming writes,
+  * merge/delete rewrites, DV deletes, column renames and drops, CHECK
+  * constraints, restore, branch publish — goes through ONE optimistic
+  * loop, [[DocStore.commit]]. It hands the op the parent
+  * [[DocStore.Snapshot]] (main's or a branch's tip) and the op returns
+  * the WHOLE next state, `parent.copy(...)`, so whatever the op does
+  * not touch carries over by construction. The loop proves the files
+  * the next state adds against its CHECK constraints and CASes version
+  * parent + 1; a lost race re-runs the op on the winner's snapshot.
+  * What belongs to the commit alone — its timestamp, operation name
+  * and declared key domain ([[DocStore.CommitMeta]]) — travels beside
+  * the state, never inside it. The manifest body is derived: a delta
+  * of next against parent, and every CheckpointInterval-th version a
+  * checkpoint rendered from the same next state. Only a shallow clone
+  * and a branch creation, which must win their one version, CAS
+  * directly ([[DocStore.casVersion]]). Reads resolve their snapshot
+  * once per operation ([[DocStore.resolve]]).
   *
   * Manifest format (UTF-8 text, one record per line; a full body lists
   * every live file, a delta body (`#delta\t<parent>`) only this
@@ -130,10 +148,10 @@ object DocStore {
   val blocksSkipped = new LongAdder
 
   /** Local-mode test seam for the optimistic-concurrency commit path
-    * (r15): if set, [[DocStoreBatchWrite.commit]] consumes it (fetch-
+    * (r15): if set, the next [[commit]] attempt consumes it (fetch-
     * and-clear, so a competing commit run INSIDE the hook doesn't
-    * recurse) and runs it once, after this job's data files are
-    * visible but before its first manifest CAS attempt — the widest
+    * recurse) and runs it once, after the committer's data files are
+    * visible but before it reads its parent and CASes — the widest
     * race window. Tests inject a full competing commit here to
     * deterministically exercise the CAS-failure → conflict-check →
     * rebase-retry (or loud-abort) path that wall-clock races only hit
@@ -320,12 +338,6 @@ object DocStore {
     Array.fill(bb.remaining() / 8)(bb.getLong())
   }
 
-  /** (file name, column) → encoded Bloom bits of snapshot `v`, from
-    * the manifest's `#bloom` header lines.
-    */
-  private[graft] def readBloomMap(dir: String,
-      v: Long): Map[(String, String), String] = readSnapshot(dir, v).blooms
-
   /** Planner-side test instrumentation: files dropped by Bloom pruning
     * (local-mode analogue of a DSv2 custom metric, like blocksSkipped).
     */
@@ -430,16 +442,6 @@ object DocStore {
       a(1) -> FileStats(a(2).toLong, cols)
     }.toOption
 
-  private[graft] def listDataFiles(dir: String): Seq[(String, Long)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".gds"))
-      .sortBy(_.getPath.getName)
-      .map(s => (s.getPath.toString, s.getLen))
-  }
-
   // ------------------------------------------------- snapshot manifests
   //
   // Iceberg/Delta-style snapshot isolation (VERDICT r12 #6): every
@@ -461,19 +463,53 @@ object DocStore {
 
   private def manifestName(v: Long): String = f"$ManifestPrefix$v%08d"
 
-  private[graft] def manifestVersions(dir: String): Seq[Long] = {
+  /** ONE listing of a table directory, classified on demand: main
+    * manifest and checkpoint versions, branch manifest versions by
+    * branch, data files (path, length) and deletion-vector sidecars.
+    * Every question about the directory's contents is answered from
+    * one of these, so an operation that needs several answers (vacuum)
+    * lists once. In-flight `.tmp` manifests are never versions.
+    */
+  private[graft] final class TableListing(entries: Seq[FileStatus]) {
+    private lazy val names =
+      entries.map(_.getPath.getName).filterNot(_.contains(".tmp"))
+    private def numbered(pre: String): Seq[Long] = names
+      .filter(_.startsWith(pre))
+      .flatMap(n => scala.util.Try(n.stripPrefix(pre).toLong).toOption)
+      .sorted
+    lazy val manifests: Seq[Long] = numbered(ManifestPrefix)
+    lazy val checkpoints: Seq[Long] = numbered(CheckpointPrefix)
+    lazy val branches: Map[String, Seq[Long]] = names
+      .filter(n => n.startsWith(BranchPrefix) && n.contains(BranchInfix))
+      .flatMap { n =>
+        val b = n.stripPrefix(BranchPrefix).takeWhile(_ != '-')
+        scala.util.Try(n.stripPrefix(s"$BranchPrefix$b$BranchInfix").toLong)
+          .toOption.map(b -> _)
+      }
+      .groupBy(_._1).map { case (b, vs) => b -> vs.map(_._2).sorted }
+    lazy val dataFiles: Seq[(String, Long)] = entries
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".gds"))
+      .sortBy(_.getPath.getName)
+      .map(s => (s.getPath.toString, s.getLen))
+    lazy val dvFiles: Seq[Path] = entries
+      .filter(s => s.isFile && s.getPath.getName.contains(".gds.dv"))
+      .map(_.getPath)
+  }
+
+  private[graft] def listTable(dir: String): TableListing = {
     val p = new Path(dir)
     val fs = fsFor(dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(ManifestPrefix) && !n.contains(".tmp"))
-      .flatMap(n =>
-        scala.util.Try(n.stripPrefix(ManifestPrefix).toLong).toOption)
-      .sorted
+    new TableListing(if (fs.exists(p)) fs.listStatus(p).toSeq else Seq.empty)
   }
+
+  private[graft] def manifestVersions(dir: String): Seq[Long] =
+    listTable(dir).manifests
 
   private[graft] def latestVersion(dir: String): Option[Long] =
     manifestVersions(dir).lastOption
+
+  private[graft] def listDataFiles(dir: String): Seq[(String, Long)] =
+    listTable(dir).dataFiles
 
   // ------------------------------- branch refs (r17 wave 2 — WAP)
   //
@@ -511,14 +547,7 @@ object DocStore {
 
   private[graft] def branchVersions(dir: String, name: String): Seq[Long] = {
     requireBranchName(name)
-    val p = new Path(dir)
-    val fs = fsFor(dir)
-    val pre = s"$BranchPrefix$name$BranchInfix"
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(pre) && !n.contains(".tmp"))
-      .flatMap(n => scala.util.Try(n.stripPrefix(pre).toLong).toOption)
-      .sorted
+    listTable(dir).branches.getOrElse(name, Seq.empty)
   }
 
   private[graft] def branchLatest(dir: String, name: String): Option[Long] =
@@ -576,30 +605,6 @@ object DocStore {
       (if (colmaps.get(logical).forall(_ == logical)) Set(logical)
        else Set.empty[String])
 
-  private[graft] def snapshotColmaps(dir: String, requested: Option[Long],
-      ref: Option[String] = None): Map[String, String] =
-    requested
-      .orElse(ref.flatMap(b => branchLatest(dir, b)))
-      .orElse(latestVersion(dir)) match {
-      case Some(v) => readSnapshot(dir, v, ref).colmaps
-      case None => Map.empty
-    }
-
-  /** All branch names with at least one manifest — vacuum's extra
-    * retention roots.
-    */
-  private[graft] def branchNames(dir: String): Seq[String] = {
-    val p = new Path(dir)
-    val fs = fsFor(dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(BranchPrefix) && n.contains(BranchInfix) &&
-        !n.contains(".tmp"))
-      .map(n => n.stripPrefix(BranchPrefix)
-        .takeWhile(_ != '-'))
-      .distinct.sorted
-  }
-
   /** Thrown when a requested snapshot's manifest is gone (typically
     * reclaimed by a concurrent [[vacuum]] past the retention window).
     * Distinct from a generic require so the OCC commit path can treat
@@ -610,29 +615,13 @@ object DocStore {
       extends IllegalArgumentException(msg)
 
   private def manifestBody(dir: String, v: Long): String = {
-    val fs = fsFor(dir)
     val mp = new Path(dir, manifestName(v))
-    if (!fs.exists(mp))
+    if (!fsFor(dir).exists(mp))
       throw new MissingSnapshotException(
         s"docstore: no snapshot version $v under $dir")
-    val in = fs.open(mp)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
+    readFileBody(dir, mp)
   }
 
-  /** Everything one manifest carries, parsed in ONE body read (r16):
-    * the commit loop and the scan planner consult files + DV bindings
-    * + Bloom indexes + key domain + schema together, and a manifest at
-    * 100 TB is file-count-sized (MBs) — re-reading it once per header
-    * kind multiplied per commit ATTEMPT is real I/O. The single-header
-    * readers below stay as thin wrappers for call sites that need one
-    * thing.
-    */
   /** The logical key domain a commit declares (`#keydomain` header):
     * the range a MERGE read-modified, and — r17 (VERDICT r16 #5) — an
     * optional Bloom filter over the EXACT key set, so a successor's
@@ -651,18 +640,47 @@ object DocStore {
       bloom: Option[String] = None,
       keys: Option[Seq[Long]] = None)
 
+  /** One whole table state, as of `version`: the live data files and
+    * the metadata keyed by their names (deletion vectors, Blooms,
+    * partition tuples, column stats), the table schema of record, and
+    * the cumulative table state (stream epoch marks, column mappings,
+    * CHECK ranges). A commit states its whole next state as one of
+    * these ([[commit]]), so no field can be dropped by leaving it out.
+    * `keyDomain` is the domain commit `version` itself declared, as
+    * read back; a writer declares its own through [[commit]].
+    * `Snapshot(0L)` is the empty table a first commit builds on.
+    */
   private[graft] final case class Snapshot(
       version: Long,
-      files: Seq[(String, Long)],
-      dvs: Map[String, String],
-      blooms: Map[(String, String), String],
-      keyDomain: Option[KeyDomain],
-      schemaDdl: Option[String],
+      files: Seq[(String, Long)] = Seq.empty,
+      dvs: Map[String, String] = Map.empty,
+      blooms: Map[(String, String), String] = Map.empty,
+      keyDomain: Option[KeyDomain] = None,
+      schemaDdl: Option[String] = None,
       parts: Map[String, Seq[(String, Option[String])]] = Map.empty,
       streams: Map[String, Long] = Map.empty,
       colmaps: Map[String, String] = Map.empty,
       checks: Map[String, (Long, Long)] = Map.empty,
       stats: Map[String, FileStats] = Map.empty)
+
+  /** What one commit records about itself and nothing folds: its
+    * timestamp (`#ts`), operation name (`#op`) and declared key domain
+    * (`#keydomain`).
+    */
+  private[graft] final case class CommitMeta(op: Option[String], ts: Long,
+      keyDomain: Option[KeyDomain] = None) {
+    op.foreach(requireOpName)
+  }
+
+  /** The op name is one tab-framed header token: a tab or newline in
+    * it would corrupt the manifest body, so the format is fixed here.
+    */
+  private[graft] def requireOpName(o: String): String = {
+    require(o.matches("[A-Za-z0-9._-]{1,64}"),
+      s"docstore: malformed operation name '$o' " +
+        "(allowed: [A-Za-z0-9._-], at most 64 chars)")
+    o
+  }
 
   // ------------------------- checkpoint + delta-tail manifests (r17)
   //
@@ -688,8 +706,7 @@ object DocStore {
   //
   // v1 and legacy manifests stay full bodies (a delta parser treats a
   // body with no `#delta` header as full), so pre-r17 directories are
-  // adopted unchanged and a chain whose parent was vacuumed under a
-  // racing writer self-heals by writing a full body.
+  // adopted unchanged.
 
   val CheckpointInterval: Int = 8
   val CheckpointPrefix = "_checkpoint-v"
@@ -886,12 +903,13 @@ object DocStore {
       colmaps: Map[String, String],
       checks: Map[String, Option[(Long, Long)]],
       op: Option[String],
-      stats: Map[String, FileStats])
+      stats: Map[String, FileStats],
+      ts: Option[Long])
 
   /** The state before version 1: what a delta chain folds onto. */
   private val emptyBody = ParsedBody(None, Seq.empty, Seq.empty, Seq.empty,
     Map.empty, Seq.empty, Map.empty, Seq.empty, None, None, Map.empty,
-    Map.empty, Map.empty, Map.empty, None, Map.empty)
+    Map.empty, Map.empty, Map.empty, None, Map.empty, None)
 
   private def parseBody(body: String): ParsedBody = {
     var deltaBase: Option[Long] = None
@@ -910,6 +928,7 @@ object DocStore {
     val checks = Map.newBuilder[String, Option[(Long, Long)]]
     var op: Option[String] = None
     val stats = Map.newBuilder[String, FileStats]
+    var ts: Option[Long] = None
     body.linesIterator.foreach { l =>
       if (l.isEmpty) ()
       else if (l.startsWith("#delta\t"))
@@ -930,6 +949,8 @@ object DocStore {
         schema = Some(l.stripPrefix("#schema\t"))
       } else if (l.startsWith("#op\t")) {
         op = Some(l.stripPrefix("#op\t").trim)
+      } else if (l.startsWith("#ts\t")) {
+        ts = Some(l.stripPrefix("#ts\t").trim.toLong)
       } else if (l.startsWith("#stream\t")) {
         val a = l.split('\t'); streams += ((a(1), a(2).toLong))
       } else if (l.startsWith("#colmap\t")) {
@@ -958,7 +979,7 @@ object DocStore {
     ParsedBody(deltaBase, files.result(), adds.result(), removes.result(),
       dvs.result(), dvRemoves.result(), blooms.result(),
       bloomRemoves.result(), kd, schema, parts.result(), streams.result(),
-      colmaps.result(), checks.result(), op, stats.result())
+      colmaps.result(), checks.result(), op, stats.result(), ts)
   }
 
   private def readFileBody(dir: String, p: Path): String = {
@@ -1074,26 +1095,42 @@ object DocStore {
       colmaps.toMap, checks.toMap, stats.toMap)
   }
 
-  /** Data files of snapshot `v`: absolute path + byte length.
-    * `#`-prefixed header lines (commit metadata, e.g. `#ts`) are
-    * skipped — and were already skipped by every reader version that
-    * shipped, so old manifests (no header) and new ones interread.
+  /** The one snapshot an operation works on: version `pinned`, else
+    * the tip of branch `ref`, else main's latest. None when the table
+    * has no manifest yet (empty, or a pre-versioning directory whose
+    * files [[listDataFiles]] lists). Lists the directory only to find a
+    * tip; a pinned read lists nothing.
     */
-  private[graft] def readManifest(dir: String, v: Long): Seq[(String, Long)] =
-    readSnapshot(dir, v).files
+  private[graft] def resolve(dir: String, pinned: Option[Long] = None,
+      ref: Option[String] = None): Option[Snapshot] =
+    pinned.orElse(tip(dir, ref)).map(readSnapshot(dir, _, ref))
 
-  /** Commit timestamp of snapshot `v` in epoch millis: the embedded
-    * `#ts` manifest header when present, else (legacy manifests
-    * written before r15) the manifest file's modification time — the
-    * same fallback Delta uses for commits without ICT.
+  /** A pre-versioning directory, read as the version-0 snapshot of
+    * its listing (its next write adopts the files into the chain).
     */
-  private[graft] def commitTimestamp(dir: String, v: Long): Long =
-    manifestBody(dir, v).linesIterator
-      .find(_.startsWith("#ts\t"))
-      .map(_.stripPrefix("#ts\t").trim.toLong)
-      .getOrElse(
-        fsFor(dir).getFileStatus(new Path(dir, manifestName(v)))
-          .getModificationTime)
+  private[graft] def unversioned(dir: String): Snapshot =
+    Snapshot(0L, listDataFiles(dir))
+
+  private def tip(dir: String, ref: Option[String]): Option[Long] =
+    ref.fold(latestVersion(dir))(branchLatest(dir, _))
+
+  /** Commit `v`'s own metadata, parsed from its body alone — no chain
+    * fold: the OCC loop reads it once per intervening version per
+    * attempt. On a branch, v's body is the branch manifest when one
+    * exists at v, else (v at or below the fork) main's. A body without
+    * `#ts` (written before r15) dates from its file's modification
+    * time, the fallback Delta uses for commits without ICT.
+    */
+  private[graft] def commitMeta(dir: String, v: Long,
+      ref: Option[String] = None): CommitMeta = {
+    val fs = fsFor(dir)
+    val bp = ref.map(b => new Path(dir, branchManifestName(b, v)))
+      .filter(fs.exists)
+    val pb = parseBody(bp.fold(manifestBody(dir, v))(readFileBody(dir, _)))
+    CommitMeta(pb.op, pb.ts.getOrElse(fs.getFileStatus(
+      bp.getOrElse(new Path(dir, manifestName(v)))).getModificationTime),
+      pb.keyDomain)
+  }
 
   /** Time travel: the snapshot a reader at `tsMillis` resolves — the
     * LATEST version whose commit timestamp is ≤ the asked-for instant
@@ -1105,32 +1142,14 @@ object DocStore {
   private[graft] def versionForTimestamp(dir: String, tsMillis: Long): Long = {
     val vs = manifestVersions(dir)
     require(vs.nonEmpty, s"docstore: no snapshots under $dir")
-    val eligible = vs.filter(v => commitTimestamp(dir, v) <= tsMillis)
+    val stamped = vs.map(v => v -> commitMeta(dir, v).ts)
+    val eligible = stamped.collect { case (v, ts) if ts <= tsMillis => v }
     require(eligible.nonEmpty,
       s"docstore: no snapshot at or before timestamp $tsMillis under " +
-        s"$dir (first commit is at ${commitTimestamp(dir, vs.head)})")
+        s"$dir (first commit is at ${stamped.head._2})")
     eligible.max
   }
 
-  /** Atomically publish manifest `v` — the version-CAS primitive of
-    * the optimistic-concurrency commit: returns false if that version
-    * already exists (a concurrent writer won the race), in which case
-    * [[DocStoreBatchWrite.commit]] REBASES onto the winner's snapshot,
-    * re-checks logical conflicts, and retries with the next number.
-    *
-    * The publish itself must FAIL when the destination exists — an
-    * exists() pre-check + rename is NOT that (ADVICE r16):
-    * RawLocalFileSystem.rename delegates to rename(2), which silently
-    * REPLACES an existing destination, so two writers racing past the
-    * pre-check would both report success with one manifest clobbered
-    * (a lost commit — the exact guarantee the OCC soak advertises).
-    * On a local FS the publish is link(2) via Files.createLink, which
-    * the kernel makes atomically fail with EEXIST; elsewhere it is
-    * FileContext.rename with Options.Rename.NONE (atomic fail-on-
-    * existing on HDFS). An object store would swap in a conditional
-    * PUT (If-None-Match), same contract.
-    */
-  /** Render the FULL snapshot body (legacy/v1 manifests, checkpoints). */
   /** How a manifest records a data-file reference (r17c — shallow
     * clones): files living under `dir` are stored by NAME (the
     * pre-clone format, byte-identical for every non-clone table);
@@ -1146,226 +1165,230 @@ object DocStore {
     else f
   }
 
-  private def fullBody(dir: String, files: Seq[(String, Long)], commitTs: Long,
-      dvs: Map[String, String], keyDomain: Option[KeyDomain],
-      blooms: Map[(String, String), String],
-      schemaDdl: Option[String],
-      parts: Map[String, Seq[(String, Option[String])]] = Map.empty,
-      streams: Map[String, Long] = Map.empty,
-      colmaps: Map[String, String] = Map.empty,
-      checks: Map[String, (Long, Long)] = Map.empty,
-      op: Option[String] = None,
-      stats: Map[String, FileStats] = Map.empty)
-      : String = {
-    // `#ts` header = in-commit timestamp (Delta's ICT shape): time
-    // travel by timestamp must not depend on FS mtimes surviving
-    // copies/restores. Readers predating the header already skip
-    // `#` lines. `#dv` headers bind deletion vectors (r15) — only
-    // for files this manifest actually lists. `#keydomain` records
-    // the logical key range a MERGE read-modified, for successor
-    // commits' serializability check (r16). `#schema` (r16): the
-    // committing writer's schema, so a table whose every row was
-    // deleted (EMPTY file list) still infers its schema on read.
-    val names = files.map { case (f, _) => new Path(f).getName }.toSet
-    val dvLines = dvs.toSeq.filter { case (n, _) => names.contains(n) }
-      .sortBy(_._1).map { case (n, dv) => s"#dv\t$n\t$dv" }
-    val kdLines = keyDomain.toSeq.map { kd =>
-      s"#keydomain\t${kd.col}\t${kd.min}\t${kd.max}" +
-        kd.bloom.map("\t" + _).getOrElse("")
-    }
-    val bloomLines = blooms.toSeq
-      .filter { case ((n, _), _) => names.contains(n) }
-      .sortBy { case ((n, c), _) => (n, c) }
-      .map { case ((n, c), b64) => s"#bloom\t$n\t$c\t$b64" }
-    val schemaLines = schemaDdl.toSeq.map(ddl => s"#schema\t$ddl")
-    val partLines = parts.toSeq
-      .filter { case (n, _) => names.contains(n) }
-      .sortBy(_._1).map { case (n, t) => partLine(n, t) }
-    val streamLines = streams.toSeq.sortBy(_._1)
-      .map { case (q, e) => s"#stream\t$q\t$e" }
-    val colmapLines = colmaps.toSeq.sortBy(_._1)
-      .map { case (p, l) => s"#colmap\t$p\t$l" }
-    val checkLines = checks.toSeq.sortBy(_._1)
-      .map { case (c, (mn, mx)) => s"#check\t$c\t$mn\t$mx" }
-    val statsLines = stats.toSeq
-      .filter { case (n, _) => names.contains(n) }
-      .sortBy(_._1).map { case (n, st) => statsLine(n, st) }
-    ((s"#ts\t$commitTs" +:
-      (op.toSeq.map(o => s"#op\t$o") ++
-        schemaLines ++ kdLines ++ dvLines ++ bloomLines ++ partLines ++
-        statsLines ++ streamLines ++ colmapLines ++ checkLines)) ++
-      files.map { case (f, len) => s"${storedName(dir, f)}\t$len" })
-      .mkString("", "\n", "\n")
+  private def nameOf(f: String): String = new Path(f).getName
+
+  /** `s` with its per-file metadata restricted to the files it lists:
+    * a file that leaves takes its DV, Blooms, tuple and stats along.
+    */
+  private def live(s: Snapshot): Snapshot = {
+    val names = s.files.map { case (f, _) => nameOf(f) }.toSet
+    s.copy(dvs = s.dvs.filter { case (n, _) => names(n) },
+      blooms = s.blooms.filter { case ((n, _), _) => names(n) },
+      parts = s.parts.filter { case (n, _) => names(n) },
+      stats = s.stats.filter { case (n, _) => names(n) })
   }
 
-  /** Render the DELTA body of commit `v` against its parent snapshot:
-    * O(this commit's changes) lines, never O(table) — the r17 shape
-    * (VERDICT r16 #1).
+  /** The per-commit header lines every body opens with. `#ts` is the
+    * in-commit timestamp (Delta's ICT shape: time travel must not
+    * depend on FS mtimes surviving copies); `#schema` (r16) is the
+    * committing writer's schema, so an EMPTY snapshot still infers
+    * one; `#keydomain` (r16) is what a MERGE read-modified, for
+    * successors' serializability check.
     */
-  private def deltaBody(dir: String, base: Snapshot, files: Seq[(String, Long)],
-      commitTs: Long, dvs: Map[String, String],
-      keyDomain: Option[KeyDomain],
-      blooms: Map[(String, String), String],
-      schemaDdl: Option[String],
-      parts: Map[String, Seq[(String, Option[String])]] = Map.empty,
-      streams: Map[String, Long] = Map.empty,
-      colmaps: Map[String, String] = Map.empty,
-      checks: Map[String, Option[(Long, Long)]] = Map.empty,
-      op: Option[String] = None,
-      stats: Map[String, FileStats] = Map.empty)
-      : String = {
-    def nameOf(f: String): String = new Path(f).getName
-    // file LINES use the stored form (name, or absolute for external
-    // clone references); METADATA maps stay keyed by basename
-    val newByName = files.map { case (f, len) => (storedName(dir, f), len) }
-    val newNames = newByName.map(_._1).toSet
-    val baseByName = base.files.map { case (f, len) =>
-      (storedName(dir, f), len) }
-    val baseNames = baseByName.map(_._1).toSet
-    val newMetaNames = files.map { case (f, _) => nameOf(f) }.toSet
-    val adds = newByName.filterNot { case (n, _) => baseNames.contains(n) }
-    val removes = baseByName.collect {
-      case (n, _) if !newNames.contains(n) => n
-    }
-    // DV/Bloom deltas only for files LIVE in the new state — removed
-    // files drop their bindings implicitly in the fold
-    val dvSets = dvs.toSeq.filter { case (n, d) =>
-      newMetaNames.contains(n) && !base.dvs.get(n).contains(d)
-    }.sortBy(_._1)
-    val dvDrops = base.dvs.keys.toSeq.sorted
-      .filter(n => newMetaNames.contains(n) && !dvs.contains(n))
-    val bloomSets = blooms.toSeq.filter { case ((n, c), b) =>
-      newMetaNames.contains(n) && !base.blooms.get((n, c)).contains(b)
-    }.sortBy { case ((n, c), _) => (n, c) }
-    val bloomDrops = base.blooms.keys.toSeq.sorted
-      .filter { case (n, c) =>
-        newMetaNames.contains(n) && !blooms.contains((n, c))
-      }
-    val header = Seq(s"#delta\t${base.version}", s"#ts\t$commitTs") ++
-      op.toSeq.map(o => s"#op\t$o") ++
-      schemaDdl.toSeq.map(ddl => s"#schema\t$ddl") ++
-      keyDomain.toSeq.map { kd =>
+  private def header(meta: CommitMeta, schemaDdl: Option[String]): Seq[String] =
+    s"#ts\t${meta.ts}" +: (meta.op.map(o => s"#op\t$o").toSeq ++
+      schemaDdl.map(ddl => s"#schema\t$ddl") ++
+      meta.keyDomain.map { kd =>
         s"#keydomain\t${kd.col}\t${kd.min}\t${kd.max}" +
           kd.bloom.map("\t" + _).getOrElse("")
-      }
-    val partSets = parts.toSeq.filter { case (n, t) =>
-      newMetaNames.contains(n) && !base.parts.get(n).contains(t)
-    }.sortBy(_._1)
-    // a file's stats never change: they travel with its add line only
-    val statsSets = adds.flatMap { case (n, _) =>
-      val meta = nameOf(n)
-      stats.get(meta).map(statsLine(meta, _))
-    }
-    val streamSets = streams.toSeq.filter { case (q, e) =>
-      !base.streams.get(q).contains(e)
-    }.sortBy(_._1)
-    val colmapSets = colmaps.toSeq.filter { case (p, l) =>
-      !base.colmaps.get(p).contains(l)
-    }.sortBy(_._1)
-    val checkSets = checks.toSeq.filter {
-      case (c, Some(r)) => !base.checks.get(c).contains(r)
-      case (c, None) => base.checks.contains(c)
-    }.sortBy(_._1)
-    (header ++
-      checkSets.map {
-        case (c, Some((mn, mx))) => s"#check\t$c\t$mn\t$mx"
-        case (c, None) => s"#check\t$c\tdrop"
-      } ++
-      colmapSets.map { case (p, l) => s"#colmap\t$p\t$l" } ++
-      streamSets.map { case (q, e) => s"#stream\t$q\t$e" } ++
-      dvSets.map { case (n, d) => s"#dv\t$n\t$d" } ++
-      dvDrops.map(n => s"#dv-\t$n") ++
-      bloomSets.map { case ((n, c), b) => s"#bloom\t$n\t$c\t$b" } ++
-      bloomDrops.map { case (n, c) => s"#bloom-\t$n\t$c" } ++
-      partSets.map { case (n, t) => partLine(n, t) } ++
-      statsSets ++
-      adds.map { case (n, len) => s"+\t$n\t$len" } ++
-      removes.map(n => s"-\t$n")).mkString("", "\n", "\n")
+      })
+
+  private def body(lines: Seq[String]): String = lines.mkString("", "\n", "\n")
+
+  /** The FULL body of snapshot `s` (v1, clones, checkpoints): every
+    * live file and all table state.
+    */
+  private def render(dir: String, s0: Snapshot, meta: CommitMeta): String = {
+    val s = live(s0)
+    body(header(meta, s.schemaDdl) ++
+      s.dvs.toSeq.sortBy(_._1).map { case (n, dv) => s"#dv\t$n\t$dv" } ++
+      s.blooms.toSeq.sortBy(_._1)
+        .map { case ((n, c), b64) => s"#bloom\t$n\t$c\t$b64" } ++
+      s.parts.toSeq.sortBy(_._1).map { case (n, t) => partLine(n, t) } ++
+      s.stats.toSeq.sortBy(_._1).map { case (n, st) => statsLine(n, st) } ++
+      s.streams.toSeq.sortBy(_._1).map { case (q, e) => s"#stream\t$q\t$e" } ++
+      s.colmaps.toSeq.sortBy(_._1).map { case (p, l) => s"#colmap\t$p\t$l" } ++
+      s.checks.toSeq.sortBy(_._1)
+        .map { case (c, (mn, mx)) => s"#check\t$c\t$mn\t$mx" } ++
+      s.files.map { case (f, len) => s"${storedName(dir, f)}\t$len" })
   }
 
-  /** Write-and-CAS manifest `v` carrying the FULL desired state; the
-    * body written is a DELTA against the parent snapshot whenever one
-    * is readable (v1, legacy-adoption, and a vacuumed-parent race fall
-    * back to a full body — self-healing, never wrong). On winning a
-    * CheckpointInterval-multiple version, also publishes the full
-    * `_checkpoint` sidecar (deterministic content — losing that write
-    * costs read speed only). `base` lets callers that already hold the
-    * parent snapshot (every commit loop does) skip re-reading it.
+  /** The DELTA body taking `base` to `next` (live): O(this commit's
+    * changes) lines, never O(table) — the r17 shape (VERDICT r16 #1).
+    * File lines use the stored form; metadata stays keyed by name, and
+    * a removed file's metadata leaves implicitly in the fold.
     */
-  private[graft] def writeManifest(dir: String, v: Long,
-      files: Seq[(String, Long)],
-      commitTs: Long = System.currentTimeMillis(),
-      dvs: Map[String, String] = Map.empty,
-      keyDomain: Option[KeyDomain] = None,
-      blooms: Map[(String, String), String] = Map.empty,
-      schemaDdl: Option[String] = None,
-      base: Option[Snapshot] = None,
-      parts: Map[String, Seq[(String, Option[String])]] = Map.empty,
-      streams: Map[String, Long] = Map.empty,
-      ref: Option[String] = None,
-      colmaps: Map[String, String] = Map.empty,
-      checks: Map[String, Option[(Long, Long)]] = Map.empty,
-      op: Option[String] = None,
-      stats: Map[String, FileStats] = Map.empty)
-      : Boolean = {
-    // the op name is a single tab-framed header token — a tab or
-    // newline in a caller-supplied `operation` option would corrupt
-    // the manifest body, so the format is fixed here, loudly
-    op.foreach(o => require(o.matches("[A-Za-z0-9._-]{1,64}"),
-      s"docstore: malformed operation name '$o' " +
-        "(allowed: [A-Za-z0-9._-], at most 64 chars)"))
-    val fs = fsFor(dir)
-    val finName = ref match {
-      case Some(b) => branchManifestName(b, v)
-      case None => manifestName(v)
+  private def diff(dir: String, base: Snapshot, next: Snapshot,
+      meta: CommitMeta): String = {
+    def changed[K, V](now: Map[K, V], was: Map[K, V]): Seq[(K, V)] =
+      now.toSeq.filter { case (k, v) => !was.get(k).contains(v) }
+    val names = next.files.map { case (f, _) => nameOf(f) }.toSet
+    val newByName = next.files.map { case (f, len) => (storedName(dir, f), len) }
+    val newStored = newByName.map(_._1).toSet
+    val baseByName = base.files.map { case (f, len) => (storedName(dir, f), len) }
+    val baseStored = baseByName.map(_._1).toSet
+    val adds = newByName.filterNot { case (n, _) => baseStored(n) }
+    val checkLines =
+      changed(next.checks, base.checks).map { case (c, (mn, mx)) =>
+        c -> s"#check\t$c\t$mn\t$mx" } ++
+      (base.checks.keySet -- next.checks.keySet).map(c => c -> s"#check\t$c\tdrop")
+    body((s"#delta\t${base.version}" +: header(meta, next.schemaDdl)) ++
+      checkLines.sortBy(_._1).map(_._2) ++
+      changed(next.colmaps, base.colmaps).sortBy(_._1)
+        .map { case (p, l) => s"#colmap\t$p\t$l" } ++
+      changed(next.streams, base.streams).sortBy(_._1)
+        .map { case (q, e) => s"#stream\t$q\t$e" } ++
+      changed(next.dvs, base.dvs).sortBy(_._1)
+        .map { case (n, d) => s"#dv\t$n\t$d" } ++
+      base.dvs.keys.toSeq.sorted
+        .filter(n => names(n) && !next.dvs.contains(n)).map(n => s"#dv-\t$n") ++
+      changed(next.blooms, base.blooms).sortBy(_._1)
+        .map { case ((n, c), b) => s"#bloom\t$n\t$c\t$b" } ++
+      base.blooms.keys.toSeq.sorted
+        .filter { case (n, c) => names(n) && !next.blooms.contains((n, c)) }
+        .map { case (n, c) => s"#bloom-\t$n\t$c" } ++
+      changed(next.parts, base.parts).sortBy(_._1)
+        .map { case (n, t) => partLine(n, t) } ++
+      // a file's stats never change: they travel with its add line only
+      adds.flatMap { case (n, _) =>
+        next.stats.get(nameOf(n)).map(statsLine(nameOf(n), _)) } ++
+      adds.map { case (n, len) => s"+\t$n\t$len" } ++
+      baseByName.collect { case (n, _) if !newStored(n) => s"-\t$n" })
+  }
+
+  /** Optimistic-concurrency commit (r15, the Delta/Iceberg protocol) —
+    * the ONE path every table change but a clone or branch creation
+    * takes. Each attempt resolves the tip (main, or branch `ref`, which
+    * must exist), runs [[commitRaceHook]], reads the parent snapshot
+    * once and hands it to `step`, which states the WHOLE next table
+    * state (`parent.copy(...)`: whatever it does not change carries
+    * over) or None to commit nothing. The next state is proved against
+    * its CHECK constraints ([[requireChecks]]) and CAS-published as
+    * version tip + 1 ([[casVersion]]); losing the race re-runs `step`
+    * on the winner's snapshot, so `step` re-checks its own logical
+    * conflicts against what actually landed. `op`, `ts` (None = the
+    * attempt's wall clock) and `keyDomain` are this commit's own
+    * metadata ([[CommitMeta]]). Returns the committed version.
+    */
+  @annotation.tailrec
+  private[graft] def commit(dir: String, op: Option[String],
+      ts: Option[Long] = None, keyDomain: Option[KeyDomain] = None,
+      ref: Option[String] = None)(
+      step: Snapshot => Option[Snapshot]): Option[Long] = {
+    val latest = tip(dir, ref)
+    ref.foreach(b => require(latest.isDefined,
+      s"docstore: no such branch '$b' under $dir (create it first)"))
+    // test seam: a competing commit injected in the NARROWEST race
+    // window — after this attempt's tip, before its parent read and CAS
+    // — so the first CAS genuinely loses and the retry path runs
+    val hook = commitRaceHook
+    commitRaceHook = None
+    hook.foreach(_())
+    val parent = latest.fold(Snapshot(0L))(readSnapshot(dir, _, ref))
+    step(parent) match {
+      case None => None
+      case Some(s) =>
+        val next = s.copy(version = parent.version + 1)
+        requireChecks(parent, next)
+        val meta = CommitMeta(op, ts.getOrElse(System.currentTimeMillis()),
+          keyDomain)
+        if (casVersion(dir, ref, parent, next, meta)) Some(next.version)
+        else commit(dir, op, ts, keyDomain, ref)(step)
     }
-    val fin = new Path(dir, finName)
-    if (fs.exists(fin)) return false
-    val parent: Option[Snapshot] =
-      if (v <= 1L) None
-      else base.filter(_.version == v - 1).orElse(
-        try Some(readSnapshot(dir, v - 1, ref))
-        catch { case _: MissingSnapshotException => None })
-    // the stream epoch map is CUMULATIVE state (unlike files/dvs/
-    // blooms, whose full maps every caller passes): callers pass only
-    // their OWN updates and the fold inherits the rest, so full bodies
-    // (checkpoints, the vacuumed-parent fallback) must merge the
-    // parent's map under this commit's entries
-    val effStreams = parent.map(_.streams ++ streams).getOrElse(streams)
-    // column mappings are cumulative state like the stream epoch map:
-    // callers pass only their own updates, the fold inherits the rest
-    val effColmaps = parent.map(_.colmaps ++ colmaps).getOrElse(colmaps)
-    val effChecks: Map[String, (Long, Long)] = {
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-      parent.foreach(p => m ++= p.checks)
-      checks.foreach {
-        case (c, Some(r)) => m(c) = r
-        case (c, None) => m -= c
+  }
+
+  /** CHECK constraints (r17 wave 2): every file `next` adds to `parent`
+    * must keep its non-null values inside `next`'s declared ranges
+    * (SQL CHECK semantics: NULL passes) — proved from the file's stats,
+    * never a decoded chunk ([[rangeOutside]]). A violation aborts the
+    * commit loudly, naming the files: the table never holds a row its
+    * constraint forbids, whichever op re-adds it.
+    */
+  private def requireChecks(parent: Snapshot, next: Snapshot): Unit =
+    if (next.checks.nonEmpty) {
+      val had = parent.files.map { case (f, _) => nameOf(f) }.toSet
+      val added = next.files.map(_._1).filterNot(f => had(nameOf(f)))
+        .sortBy(nameOf)
+      val bad = for {
+        (c, (mn, mx)) <- next.checks.toSeq.sortBy(_._1)
+        f <- added
+        (lo, hi) <- rangeOutside(next, f, c, mn, mx)
+      } yield s"$c in [$lo, $hi] outside [$mn, $mx] (${nameOf(f)})"
+      require(bad.isEmpty, "docstore: CHECK constraint violation — " +
+        bad.take(3).mkString("; ") + (if (bad.size > 3) "; …" else "") +
+        "; commit aborted")
+    }
+
+  /** The [min, max] of logical column `col`'s non-null values in data
+    * file `f` of `sn`, when it leaves [mn, mx]: read from the file's
+    * `#stats` line (block headers for a file without one), under every
+    * physical name `col` resolves to.
+    */
+  private[graft] def rangeOutside(sn: Snapshot, f: String, col: String,
+      mn: Long, mx: Long): Option[(Any, Any)] = {
+    val st = sn.stats.get(nameOf(f))
+    physicalAliases(sn.colmaps, col).iterator.flatMap { a =>
+      st match {
+        case Some(s) => s.cols.get(a).collect {
+          case LongRange(x, y) => (x, y)
+          case DoubleRange(x, y) => (x, y)
+        }
+        case None => fileColumnStats(f, a)
       }
-      m.toMap
+    }.collectFirst {
+      case (a: Long, b: Long) if a < mn || b > mx => (a, b)
+      case (a: Double, b: Double) if a < mn.toDouble || b > mx.toDouble =>
+        (a, b)
     }
-    // a file's stats never change, so every file the parent describes
-    // keeps its stats: callers pass only those of files the parent
-    // does not list (the full bodies below keep the live ones)
-    val effStats = parent.map(_.stats ++ stats).getOrElse(stats)
-    val body = parent match {
-      case Some(b) => deltaBody(dir, b, files, commitTs, dvs, keyDomain,
-        blooms, schemaDdl, parts, streams, colmaps, checks, op, effStats)
-      case None => fullBody(dir, files, commitTs, dvs, keyDomain, blooms,
-        schemaDdl, parts, effStreams, effColmaps, effChecks, op, effStats)
-    }
-    val tmp = new Path(dir,
-      s"$finName.tmp-${java.util.UUID.randomUUID()}")
+  }
+
+  /** Write-and-CAS version `n.version` of the main chain (or branch
+    * `ref`): a DELTA against `parent` when it is the version below,
+    * else (v1, a clone) a FULL body. Returns false when that version
+    * already exists — a concurrent writer won. On winning a
+    * CheckpointInterval-multiple main version, also publishes the full
+    * `_checkpoint` sidecar, rendered from the same next state the delta
+    * describes, so the checkpoint equals the chain it summarises
+    * (losing that write costs read speed only).
+    *
+    * The publish itself must FAIL when the destination exists — an
+    * exists() pre-check + rename is NOT that (ADVICE r16):
+    * RawLocalFileSystem.rename delegates to rename(2), which silently
+    * REPLACES an existing destination, so two writers racing past the
+    * pre-check would both report success with one manifest clobbered
+    * (a lost commit — the exact guarantee the OCC soak advertises).
+    * On a local FS the publish is link(2) via Files.createLink, which
+    * the kernel makes atomically fail with EEXIST; elsewhere it is
+    * FileContext.rename with Options.Rename.NONE (atomic fail-on-
+    * existing on HDFS). An object store would swap in a conditional
+    * PUT (If-None-Match), same contract.
+    */
+  private[graft] def casVersion(dir: String, ref: Option[String],
+      parent: Snapshot, n: Snapshot, meta: CommitMeta): Boolean = {
+    val fs = fsFor(dir)
+    val v = n.version
+    val fin = new Path(dir, ref.fold(manifestName(v))(branchManifestName(_, v)))
+    if (fs.exists(fin)) return false
+    val isDelta = v > 1L && parent.version == v - 1
+    // files in the order the fold reconstructs them — the parent's
+    // survivors, then this commit's adds — so a checkpoint lists what
+    // a reader of the chain sees
+    val next = live(if (!isDelta) n else {
+      val had = parent.files.map { case (f, _) => nameOf(f) }.toSet
+      val byName = n.files.map(f => nameOf(f._1) -> f).toMap
+      n.copy(files = parent.files.flatMap(f => byName.get(nameOf(f._1))) ++
+        n.files.filterNot(f => had(nameOf(f._1))))
+    })
+    val text = if (isDelta) diff(dir, parent, next, meta) else render(dir, next, meta)
+    val tmp = new Path(dir, s"${fin.getName}.tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    try out.write(text.getBytes("UTF-8")) finally out.close()
     val won = publishAtomic(fs, tmp, fin)
     // branch chains never checkpoint: they are short-lived (WAP) by
     // contract, and a branch checkpoint at a main version number would
     // shadow main's own fold base for every reader
     if (won && ref.isEmpty && v % CheckpointInterval == 0L)
-      writeCheckpoint(dir, v, fullBody(dir, files, commitTs, dvs, keyDomain,
-        blooms, schemaDdl, parts, effStreams, effColmaps, effChecks, op,
-        effStats))
+      writeCheckpoint(dir, v, if (isDelta) render(dir, next, meta) else text)
     won
   }
 
@@ -1389,7 +1412,7 @@ object DocStore {
 
   /** Publish `tmp` as `fin`, atomically failing (returning false and
     * cleaning up `tmp`) when `fin` already exists — see the
-    * [[writeManifest]] doc for why a pre-check + rename cannot be
+    * [[casVersion]] doc for why a pre-check + rename cannot be
     * trusted with this.
     */
   private[graft] def publishAtomic(fs: FileSystem, tmp: Path,
@@ -1426,19 +1449,6 @@ object DocStore {
     if (!won || fs.exists(tmp)) fs.delete(tmp, false)
     won
   }
-
-  /** The file set a scan plans: an explicitly requested snapshot, else
-    * the latest manifest, else (legacy, pre-manifest dir) the listing.
-    */
-  private[graft] def snapshotFiles(dir: String,
-      requested: Option[Long]): Seq[(String, Long)] =
-    requested match {
-      case Some(v) => readManifest(dir, v)
-      case None => latestVersion(dir) match {
-        case Some(v) => readManifest(dir, v)
-        case None    => listDataFiles(dir)
-      }
-    }
 
   // ---------------------------------------------- deletion vectors (r15)
   //
@@ -1501,71 +1511,12 @@ object DocStore {
     } finally in.close()
   }
 
-  /** The committing writer's schema DDL of snapshot `v` (`#schema`
-    * header), when recorded. The authoritative table schema is still
-    * the by-name union of LIVE file schemas; this header only serves
-    * reads of an EMPTY snapshot (every row deleted) and carries
-    * forward through metadata-only commits.
-    */
-  private[graft] def readSchemaHeader(dir: String, v: Long): Option[String] =
-    readSnapshot(dir, v).schemaDdl
-
-  /** The logical key domain commit `v` declared (`#keydomain` header):
-    * (column, min, max) of the keys a MERGE read-modified. None for
-    * commits that declared none (appends, compaction, pre-r16).
-    */
-  private[graft] def readKeyDomain(dir: String,
-      v: Long): Option[KeyDomain] = readSnapshot(dir, v).keyDomain
-
-  /** Commit `v`'s own `#keydomain` line parsed from its body ALONE —
-    * no Bloom decode, no full snapshot materialization: the OCC commit
-    * loop calls this once per intervening version per retry attempt,
-    * and at commit time O(gap × full-manifest bytes) is real latency
-    * (ADVICE r16). `#keydomain` is per-commit metadata, present
-    * verbatim in the commit's own body, so no folding is needed.
-    */
-  private[graft] def readCommitKeyDomain(dir: String,
-      v: Long, ref: Option[String] = None): Option[KeyDomain] = {
-    // on a branch, version v's own body is the branch manifest when
-    // one exists at v, else (v at or below the fork) main's
-    val body = ref.map(b => new Path(dir, branchManifestName(b, v)))
-      .filter(fsFor(dir).exists) match {
-      case Some(bp) => readFileBody(dir, bp)
-      case None => manifestBody(dir, v)
-    }
-    body.linesIterator
-      .find(_.startsWith("#keydomain\t"))
-      .map { l =>
-        val a = l.split('\t')
-        KeyDomain(a(1), a(2).toLong, a(3).toLong,
-          if (a.length > 4) Some(a(4)) else None)
-      }
-  }
-
-  /** Data-file name → deletion-vector file name bindings of snapshot
-    * `v`, from the manifest's `#dv` header lines. Empty for pre-DV
-    * manifests.
-    */
-  private[graft] def readDvMap(dir: String, v: Long,
-      ref: Option[String] = None): Map[String, String] =
-    readSnapshot(dir, v, ref).dvs
-
-  /** The DV bindings a scan applies: requested snapshot, else latest,
-    * else (legacy dir) none.
-    */
-  private[graft] def snapshotDvs(dir: String,
-      requested: Option[Long]): Map[String, String] =
-    requested.orElse(latestVersion(dir)) match {
-      case Some(v) => readDvMap(dir, v)
-      case None    => Map.empty
-    }
-
   /** One commit's history row (the Delta DESCRIBE HISTORY shape,
     * restricted to what the manifest records): the operation name the
     * committer declared (`#op` header; pre-r17c manifests have none
     * and read as "unknown"), the body shape (delta vs full), and the
-    * commit's own change counts. For a FULL body past v1 (the
-    * vacuumed-parent self-heal) the adds count is the full listing —
+    * commit's own change counts. For a FULL body past v1 (an older
+    * writer's vacuumed-parent self-heal) the adds count is the full listing —
     * per-commit attribution was lost with the parent, which the
     * is_delta=false flag makes visible rather than papering over.
     */
@@ -1580,16 +1531,16 @@ object DocStore {
     * beyond line scanning, no data-file opens.
     */
   private[graft] def history(dir: String): Seq[CommitInfo] = {
-    val fs = fsFor(dir)
-    manifestVersions(dir).sorted.map { v =>
+    val ls = listTable(dir)
+    ls.manifests.map { v =>
       val pb = parseBody(manifestBody(dir, v))
       val delta = pb.deltaBase.isDefined
-      CommitInfo(v, commitTimestamp(dir, v),
+      CommitInfo(v, commitMeta(dir, v).ts,
         pb.op.getOrElse("unknown"), delta,
         if (delta) pb.addFiles.size.toLong else pb.files.size.toLong,
         pb.removeFiles.size.toLong,
         (pb.dvs.size + pb.dvRemoves.size).toLong,
-        fs.exists(checkpointPath(dir, v)))
+        ls.checkpoints.contains(v))
     }
   }
 
@@ -1626,69 +1577,59 @@ object DocStore {
       dryRun: Boolean = false): VacuumReport = {
     require(retainLast >= 1, "vacuum must retain at least the latest version")
     var dataN = 0; var dataBytes = 0L; var dvN = 0; var manifestN = 0
-    latestVersion(dir).foreach { v =>
+    // ONE listing classifies every entry the run reclaims or keeps
+    val ls = listTable(dir)
+    ls.manifests.lastOption.foreach { v =>
       val fs = fsFor(dir)
       // live branches are retention ROOTS (r17 wave 2): a branch tip's
       // fold falls through to main at its fork base, so the floor may
       // not rise past any fork — else the branch's own read chain gets
       // reclaimed under it. Branch data files and DV bindings join the
       // liveness sets below for the same reason.
-      val forkFloors = branchNames(dir)
-        .flatMap(b => branchVersions(dir, b).headOption.map(_ - 1))
+      val forkFloors = ls.branches.values.flatMap(_.headOption.map(_ - 1))
       val floor = (Seq(v - (retainLast - 1)) ++ forkFloors).min
-      val retained = manifestVersions(dir).filter(_ >= floor)
+      // one fold per retained version (and per branch tip), read while
+      // the full chain is still there
+      val retained = ls.manifests.filter(_ >= floor).map(readSnapshot(dir, _))
+      val branchTips = ls.branches.toSeq.map { case (b, vs) =>
+        readSnapshot(dir, vs.last, Some(b))
+      }
       // delta-tail manifests (r17): a retained version may reconstruct
       // through delta bodies REACHING BELOW the floor, so before any
       // old manifest is dropped, anchor the floor with a checkpoint —
       // every retained read then folds from it, never from a reclaimed
-      // manifest. Computed while the full chain is still readable.
+      // manifest. The floor checkpoint has always carried no `#op`.
       // A DRY RUN anchors nothing: it must leave the table bit-identical.
       if (!dryRun) retained.headOption.foreach { fl =>
-        val sn = readSnapshot(dir, fl)
-        writeCheckpoint(dir, fl, fullBody(dir, sn.files, commitTimestamp(dir, fl),
-          sn.dvs, sn.keyDomain, sn.blooms, sn.schemaDdl, sn.parts,
-          sn.streams, sn.colmaps, sn.checks, stats = sn.stats))
+        writeCheckpoint(dir, fl.version, render(dir, fl,
+          CommitMeta(None, commitMeta(dir, fl.version).ts, fl.keyDomain)))
       }
-      val branchSnaps = branchNames(dir).flatMap { b =>
-        branchLatest(dir, b).map(t => readSnapshot(dir, t, Some(b)))
-      }
-      val live = (retained.flatMap(readManifest(dir, _)) ++
-        branchSnaps.flatMap(_.files)).map { case (f, _) =>
-        new Path(f).getName
-      }.toSet
-      listDataFiles(dir).foreach { case (f, len) =>
-        val p = new Path(f)
-        if (!live.contains(p.getName)) {
+      val kept = retained ++ branchTips
+      val live = kept.flatMap(_.files).map { case (f, _) => nameOf(f) }.toSet
+      ls.dataFiles.foreach { case (f, len) =>
+        if (!live.contains(nameOf(f))) {
           dataN += 1; dataBytes += len
-          if (!dryRun) fs.delete(p, false)
+          if (!dryRun) fs.delete(new Path(f), false)
         }
       }
       // deletion-vector sidecars: keep the ones ANY retained manifest
       // (or branch tip) binds; superseded vectors go
-      val liveDvs = (retained.flatMap(readDvMap(dir, _).values) ++
-        branchSnaps.flatMap(_.dvs.values)).toSet
-      fs.listStatus(new Path(dir)).toSeq
-        .filter(s => s.isFile && s.getPath.getName.contains(".gds.dv"))
-        .foreach { s =>
-          if (!liveDvs.contains(s.getPath.getName)) {
-            dvN += 1
-            if (!dryRun) fs.delete(s.getPath, false)
-          }
+      val liveDvs = kept.flatMap(_.dvs.values).toSet
+      ls.dvFiles.foreach { p =>
+        if (!liveDvs.contains(p.getName)) {
+          dvN += 1
+          if (!dryRun) fs.delete(p, false)
         }
-      manifestVersions(dir).filter(_ < floor).foreach { old =>
+      }
+      ls.manifests.filter(_ < floor).foreach { old =>
         manifestN += 1
         if (!dryRun) fs.delete(new Path(dir, manifestName(old)), false)
       }
       // checkpoints below the floor serve no retained read — and must
       // go so a past-retention read stays LOUD (a stale checkpoint at
       // a reclaimed version would silently serve it)
-      if (!dryRun)
-        fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
-          .filter(n => n.startsWith(CheckpointPrefix) && !n.contains(".tmp"))
-          .flatMap(n =>
-            scala.util.Try(n.stripPrefix(CheckpointPrefix).toLong).toOption)
-          .filter(_ < floor)
-          .foreach(old => fs.delete(checkpointPath(dir, old), false))
+      if (!dryRun) ls.checkpoints.filter(_ < floor)
+        .foreach(old => fs.delete(checkpointPath(dir, old), false))
     }
     VacuumReport(dataN, dataBytes, dvN, manifestN)
   }
@@ -1904,18 +1845,20 @@ class DocStoreDataSource extends TableProvider with DataSourceRegister {
     // live file — a production variant would persist the merged schema
     // in the manifest the way Delta logs it.
     val dir = path(options)
-    val files = DocStore.snapshotFiles(dir, None)
+    // one resolution serves files, column mappings and the #schema
+    // header; a pre-versioning directory plans its listing
+    val sn = DocStore.resolve(dir).getOrElse(DocStore.unversioned(dir))
+    val files = sn.files
     // column mapping (r17 wave 2): files carry PHYSICAL names forever;
     // the inferred table schema is logical — each file schema is
     // translated before the union, so renamed eras merge into one
     // column and dropped ones disappear
-    val colmaps = DocStore.snapshotColmaps(dir, None)
+    val colmaps = sn.colmaps
     if (files.isEmpty) {
       // an EMPTY snapshot (every row deleted — zero-row tasks publish
       // no file) still has a schema: the last committing writer's,
       // recorded in the manifest's #schema header (r16)
-      val fromHeader = DocStore.latestVersion(dir)
-        .flatMap(v => DocStore.readSchemaHeader(dir, v))
+      val fromHeader = sn.schemaDdl
       require(fromHeader.isDefined,
         s"docstore: no .gds files under $dir and no schema given")
       return DocStore.applyColmaps(StructType.fromDDL(fromHeader.get),
@@ -2057,13 +2000,9 @@ class DocStoreTable(dir: String, tableSchema: StructType,
       Option(info.options.get("branch")).map { b =>
         DocStore.requireBranchName(b); b
       },
-      Option(info.options.get("operation")).filter(_.nonEmpty).map { o =>
-        // fail at option-parse time, before any task writes a byte
-        require(o.matches("[A-Za-z0-9._-]{1,64}"),
-          s"docstore: malformed operation name '$o' " +
-            "(allowed: [A-Za-z0-9._-], at most 64 chars)")
-        o
-      })
+      // fail at option-parse time, before any task writes a byte
+      Option(info.options.get("operation")).filter(_.nonEmpty)
+        .map(DocStore.requireOpName))
 }
 
 class DocStoreScanBuilder(dir: String, fullSchema: StructType,
@@ -2081,6 +2020,26 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
   private var pushed: Array[Filter] = Array.empty
   private var pushedAgg: Seq[DocStoreAggExpr] = Seq.empty
 
+  // the snapshot resolves ONCE, at planning — in pushAggregation or
+  // build, whichever asks first: the file list is pinned before
+  // execution, so a commit racing the read cannot hand it a mixed or
+  // shrinking file set, and one read parses the chain once
+  private lazy val snap: DocStore.Snapshot =
+    DocStore.resolve(dir, snapshotVersion, ref)
+      .getOrElse(DocStore.unversioned(dir))
+  // column mapping: pushed filters name LOGICAL columns; manifest
+  // metadata (partition tuples, Blooms, stats) is keyed by the writing
+  // era's PHYSICAL name. The mapping resolves at the ref's TIP even
+  // for a pinned-snapshot read: the table schema (and every filter
+  // Spark pushed) speaks TODAY's logical names, so time travel changes
+  // the DATA, never the naming — a pre-rename snapshot reads its old
+  // physical columns under the current logical name (the Iceberg
+  // time-travel-with-current-schema shape). Only time travel pays a
+  // second (tip) resolution.
+  private lazy val colmaps: Map[String, String] =
+    if (snapshotVersion.isEmpty) snap.colmaps
+    else DocStore.resolve(dir, None, ref).fold(Map.empty[String, String])(_.colmaps)
+
   /** Metadata-only aggregate pushdown (the Iceberg/Delta
     * count-from-manifests shape): ungrouped COUNT(*) / MIN / MAX with
     * no filters are answered from BLOCK HEADERS alone — one partition
@@ -2097,13 +2056,12 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
   override def pushAggregation(agg: Aggregation): Boolean = {
     if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty ||
       fileSubset.nonEmpty) return false
-    val dvsLive = DocStore.snapshotDvs(dir, snapshotVersion).nonEmpty
+    val dvsLive = snap.dvs.nonEmpty
     // column mapping: the header-only agg scan reads block stats by
     // the FILE's physical name; a logical column with a non-identity
     // alias set would need per-file translation — decline min/max
     // pushdown on mapped columns (the normal scan stays correct),
     // COUNT(*) is name-free and always safe
-    val colmaps = DocStore.snapshotColmaps(dir, snapshotVersion, ref)
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case r: org.apache.spark.sql.connector.expressions.NamedReference
@@ -2142,25 +2100,14 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
     required = requiredSchema
 
   override def build(): Scan = {
-    // the snapshot resolves HERE, when the scan is planned: the file
-    // list is pinned before execution, so a commit racing the read
-    // cannot hand it a mixed or shrinking file set. The `files` option
-    // (a set of file NAMES) restricts the scan to a subset of the
-    // snapshot — the seam DocStoreOps.merge/compact use to read only
-    // the affected files of a copy-on-write rewrite.
-    // ONE manifest read serves files + DV bindings + Bloom indexes
-    // (r16): scan planning is driver-side and the manifest is
-    // file-count-sized at 100 TB
-    val resolved = snapshotVersion
-      .orElse(ref.flatMap(b => DocStore.branchLatest(dir, b)))
-      .orElse(DocStore.latestVersion(dir))
-    val snapOpt = resolved.map(v => DocStore.readSnapshot(dir, v, ref))
-    val snap = snapOpt.map(_.files).getOrElse(DocStore.listDataFiles(dir))
+    // the `files` option (a set of file NAMES) restricts the scan to a
+    // subset of the snapshot — the seam DocStoreOps.merge/compact use
+    // to read only the affected files of a copy-on-write rewrite
     val subset = fileSubset match {
-      case Some(names) => snap.filter { case (f, _) =>
+      case Some(names) => snap.files.filter { case (f, _) =>
         names.contains(new Path(f).getName)
       }
-      case None => snap
+      case None => snap.files
     }
     // identity-partition pruning (r17, VERDICT r16 #4) — the FIRST
     // gate, before any stats or Blooms: a partitioned file carries ONE
@@ -2170,21 +2117,8 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
     // equality-shaped subset Blooms serve). Files without a recorded
     // tuple for the column are never pruned (unpartitioned or
     // pre-partitioning files stay conservatively scanned).
-    val partsMeta = snapOpt.map(_.parts).getOrElse(Map.empty)
-    // column mapping: pushed filters name LOGICAL columns; manifest
-    // metadata (partition tuples, Blooms) is keyed by the writing
-    // era's PHYSICAL name — consult every alias (per file at most one
-    // is present). The mapping resolves at the ref's TIP even for a
-    // pinned-snapshot read: the table schema (and every filter Spark
-    // pushed) speaks TODAY's logical names, so time travel changes
-    // the DATA, never the naming — a pre-rename snapshot reads its
-    // old physical columns under the current logical name (the
-    // Iceberg time-travel-with-current-schema shape). Unpinned scans
-    // reuse the one snapshot already read (the r16 one-parse
-    // discipline); only time travel pays a second (tip) parse.
-    val colmaps =
-      if (snapshotVersion.isEmpty) snapOpt.map(_.colmaps).getOrElse(Map.empty)
-      else DocStore.snapshotColmaps(dir, None, ref)
+    val partsMeta = snap.parts
+    // per file at most one physical alias of a filtered column is present
     def aliases(c: String): Set[String] =
       if (colmaps.isEmpty) Set(c)
       else DocStore.physicalAliases(colmaps, c)
@@ -2238,7 +2172,7 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
     // no Bloom for the column is never pruned. Sound because every
     // non-null stored value was added to the writer's Bloom and
     // equality never matches null.
-    val blooms = snapOpt.map(_.blooms).getOrElse(Map.empty)
+    val blooms = snap.blooms
     val bloomKept =
       if (blooms.isEmpty || pushed.isEmpty) partPruned
       else {
@@ -2275,7 +2209,7 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
     // and columns with no range are kept. Their blocks count as
     // skipped — the block counters then mean the same with or without
     // this gate.
-    val fileStats = snapOpt.map(_.stats).getOrElse(Map.empty)
+    val fileStats = snap.stats
     val statsKept =
       if (fileStats.isEmpty || pushed.isEmpty) bloomKept
       else {
@@ -2294,7 +2228,7 @@ class DocStoreScanBuilder(dir: String, fullSchema: StructType,
       }
     val pruning = DocStoreScanPruning(subset.size, subset.size - partPruned.size,
       partPruned.size - bloomKept.size, bloomKept.size - statsKept.size)
-    val dvs = snapOpt.map(_.dvs).getOrElse(Map.empty)
+    val dvs = snap.dvs
     if (pushedAgg.nonEmpty)
       new DocStoreAggScan(dir, statsKept, dvs, pushedAgg, fullSchema)
     else
@@ -2558,8 +2492,8 @@ class DocStoreMicroBatchStream(
     colmaps: Map[String, String] = Map.empty)
     extends MicroBatchStream {
 
-  private def filesOf(v: Long): Seq[(String, Long)] =
-    if (v <= 0) Nil else DocStore.readManifest(dir, v)
+  private def snapAt(v: Long): DocStore.Snapshot =
+    if (v <= 0) DocStore.Snapshot(0L) else DocStore.readSnapshot(dir, v)
 
   override def initialOffset(): Offset = DocStoreOffset(0L)
 
@@ -2577,10 +2511,12 @@ class DocStoreMicroBatchStream(
     // retirement + an addition instead of silently "unchanged" —
     // writers generate UUID-unique names today, this guards the
     // invariant rather than assuming it
-    val beforeKeys = filesOf(v0).map { case (f, len) =>
+    val s0 = snapAt(v0)
+    val s1 = snapAt(v1)
+    val beforeKeys = s0.files.map { case (f, len) =>
       (new Path(f).getName, len)
     }.toSet
-    val after = filesOf(v1)
+    val after = s1.files
     val removed = beforeKeys --
       after.map { case (f, len) => (new Path(f).getName, len) }.toSet
     require(removed.isEmpty || ignoreChanges,
@@ -2593,9 +2529,8 @@ class DocStoreMicroBatchStream(
     // right past it and silently KEEP the deleted rows downstream.
     // Same contract as rewrites: loud unless ignoreChanges, in which
     // case the re-masked files re-emit (with the new mask applied)
-    val dv0 = if (v0 <= 0) Map.empty[String, String]
-      else DocStore.readDvMap(dir, v0)
-    val dv1 = DocStore.readDvMap(dir, v1)
+    val dv0 = s0.dvs
+    val dv1 = s1.dvs
     // only files ALREADY STREAMED count as re-masked (ADVICE r15): a
     // brand-new file that arrives with a mask pre-bound — including the
     // whole table on the v0=0 initial load — plans below with the dv1
@@ -2924,69 +2859,54 @@ class DocStoreStreamingWrite(dir: String, schema: StructType,
       case other =>
         throw new IllegalStateException(s"docstore: foreign message $other")
     }
-    def dropTmps(): Unit = fileCommits.foreach { fc =>
+    var renamed = false
+    // REPLAYED epoch (or a racing duplicate commit of it that lost),
+    // or a refused one: nothing of this epoch may stay behind
+    def discard(): Unit = fileCommits.foreach { fc =>
+      if (renamed) {
+        val f = new Path(fc.finalPath)
+        if (fs.exists(f)) fs.delete(f, false)
+      }
       val t = new Path(fc.tmpPath)
       if (fs.exists(t)) fs.delete(t, false)
     }
-    var renamed = false
-    var done = false
-    while (!done) {
-      val latest = DocStore.latestVersion(dir)
-      // same deterministic race seam as the batch commit: a competing
-      // commit injected between this attempt's snapshot read and its
-      // CAS, so specs drive the rebase path for real
-      val hook = DocStore.commitRaceHook
-      DocStore.commitRaceHook = None
-      hook.foreach(_())
-      val snapNow = latest.map(v => DocStore.readSnapshot(dir, v))
-      val mark = snapNow.flatMap(_.streams.get(queryId))
-      if (mark.exists(_ >= epochId)) {
-        // REPLAYED epoch (or a racing duplicate commit of it that
-        // lost): its rows are already in the table — discard, don't
-        // double-publish
-        if (renamed) fileCommits.foreach { fc =>
-          val f = new Path(fc.finalPath)
-          if (fs.exists(f)) fs.delete(f, false)
-        }
-        dropTmps()
-        done = true
-      } else {
-        if (!renamed) {
-          fileCommits.foreach { fc =>
-            val t = new Path(fc.tmpPath)
-            val f = new Path(fc.finalPath)
-            if (fs.exists(t) && !fs.rename(t, f))
-              throw new java.io.IOException(
-                s"docstore: epoch commit rename failed: ${fc.tmpPath}")
-          }
-          renamed = true
-        }
-        val newFiles = fileCommits.map { fc =>
-          (fc.finalPath, fs.getFileStatus(new Path(fc.finalPath)).getLen)
-        }
-        val newBlooms = fileCommits.flatMap { fc =>
-          val n = new Path(fc.finalPath).getName
-          fc.blooms.map { case (c, b64) => ((n, c), b64) }
-        }.toMap
-        val newParts = fileCommits.collect {
-          case fc if fc.parts.nonEmpty =>
-            new Path(fc.finalPath).getName -> fc.parts
-        }.toMap
-        // pure append: inherit everything, add this epoch's files and
-        // advance the high-water mark — losing the CAS just rebases
-        val inherited = snapNow.map(_.files).getOrElse(Seq.empty)
-        done = DocStore.writeManifest(dir, latest.getOrElse(0L) + 1,
-          inherited ++ newFiles,
-          dvs = snapNow.map(_.dvs).getOrElse(Map.empty),
-          blooms = snapNow.map(_.blooms).getOrElse(Map.empty) ++ newBlooms,
-          schemaDdl = Some(schema.toDDL),
-          base = snapNow,
-          parts = snapNow.map(_.parts).getOrElse(Map.empty) ++ newParts,
-          streams = Map(queryId -> epochId),
-          op = Some("stream"),
-          stats = DocStoreFileCommit.statsOf(fileCommits))
-      }
+    lazy val newFiles = fileCommits.map { fc =>
+      (fc.finalPath, fs.getFileStatus(new Path(fc.finalPath)).getLen)
     }
+    val newBlooms = fileCommits.flatMap { fc =>
+      val n = new Path(fc.finalPath).getName
+      fc.blooms.map { case (c, b64) => ((n, c), b64) }
+    }.toMap
+    val newParts = fileCommits.collect {
+      case fc if fc.parts.nonEmpty =>
+        new Path(fc.finalPath).getName -> fc.parts
+    }.toMap
+    val committed =
+      try DocStore.commit(dir, Some("stream")) { parent =>
+        // an epoch at or below the mark is already in the table
+        if (parent.streams.get(queryId).exists(_ >= epochId)) None
+        else {
+          if (!renamed) {
+            fileCommits.foreach { fc =>
+              val t = new Path(fc.tmpPath)
+              val f = new Path(fc.finalPath)
+              if (fs.exists(t) && !fs.rename(t, f))
+                throw new java.io.IOException(
+                  s"docstore: epoch commit rename failed: ${fc.tmpPath}")
+            }
+            renamed = true
+          }
+          // pure append: add this epoch's files and advance the
+          // high-water mark — losing the CAS just rebases
+          Some(parent.copy(files = parent.files ++ newFiles,
+            blooms = parent.blooms ++ newBlooms,
+            parts = parent.parts ++ newParts,
+            stats = parent.stats ++ DocStoreFileCommit.statsOf(fileCommits),
+            streams = parent.streams + (queryId -> epochId),
+            schemaDdl = Some(schema.toDDL)))
+        }
+      } catch { case e: IllegalArgumentException => discard(); throw e }
+    if (committed.isEmpty) discard()
   }
 
   override def abort(epochId: Long,
@@ -3086,11 +3006,11 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
 
   /** Optimistic-concurrency commit (r15, VERDICT r14 #1 — the
     * Delta/Iceberg commit protocol): publish this job's files by
-    * version-CAS on the manifest number. Each attempt re-reads the
-    * CURRENT latest manifest, re-applies this commit's logical change
-    * (drop `replaceFiles`, add the new files) on top of it, and tries
-    * to publish latest+1; [[DocStore.writeManifest]] is the CAS — it
-    * refuses to overwrite an existing version. Losing the race is not
+    * version-CAS on the manifest number, through [[DocStore.commit]]:
+    * each attempt re-applies this commit's logical change (drop
+    * `replaceFiles`, add the new files) to the CURRENT latest snapshot
+    * and publishes latest+1, and the CAS refuses to overwrite an
+    * existing version. Losing the race is not
     * an error: the loser REBASES onto the winner's snapshot and
     * retries, PROVIDED the two commits are logically disjoint — every
     * file this commit retires must still be live in the winner's
@@ -3152,45 +3072,32 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
       }.toMap
     val newStats = DocStoreFileCommit.statsOf(fileCommits)
     val newNames = newFiles.map { case (f, _) => new Path(f).getName }.toSet
-    var committed = false
-    while (!committed) {
-      // the base is re-captured EVERY attempt — losing the CAS means a
-      // concurrent commit moved the snapshot, and the retry must carry
-      // the winner's files forward (the r14 code captured the base
-      // once and bumped only the version number, which silently
-      // dropped the winner's files: last-rename-wins)
-      // on a branch (r17 wave 2): the commit CAS runs against the
-      // BRANCH tip — the branch must have been created first (its
-      // create() manifest pins the fork), so a typo'd name cannot
-      // silently fork a new history
-      val latest = ref match {
-        case Some(b) =>
-          val t = DocStore.branchLatest(dir, b)
-          require(t.isDefined,
-            s"docstore: no such branch '$b' under $dir (create it first)")
-          t
-        case None => DocStore.latestVersion(dir)
+    def abortConflict(msg: String): Nothing =
+      throw new java.util.ConcurrentModificationException(
+        s"docstore: conflicting concurrent commit under $dir — " + msg +
+          "; rerun the operation against the new snapshot")
+    // manifests this conflict check needs may have been reclaimed by
+    // a concurrent vacuum (retention raced the commit): that is a
+    // CONSERVATIVE CONFLICT — abort-and-rerun against the new
+    // snapshot — not a "no snapshot version" assertion (ADVICE r16)
+    def orVacuumConflict[A](what: String)(body: => A): A =
+      try body
+      catch {
+        case e: DocStore.MissingSnapshotException =>
+          abortConflict(s"$what was vacuumed mid-commit " +
+            s"(${e.getMessage})")
       }
-      // test seam: a competing commit injected in the NARROWEST race
-      // window — after this attempt's snapshot read, before its CAS —
-      // so the first writeManifest genuinely loses and the retry path
-      // (rebase + conflict re-check) runs for real
-      val hook = DocStore.commitRaceHook
-      DocStore.commitRaceHook = None
-      hook.foreach(_())
-      // ONE manifest body read per attempt serves files + DVs + Blooms
-      // (r16): the manifest is file-count-sized at 100 TB, and the
-      // pre-r16 code re-read it once per header kind
-      val snapNow = latest.map(v => DocStore.readSnapshot(dir, v, ref))
+    // on a branch (r17 wave 2) the commit runs against the BRANCH tip;
+    // the branch must have been created first (its create() manifest
+    // pins the fork), so a typo'd name cannot silently fork a history
+    try DocStore.commit(dir, Some(opName), commitTs, keyDomain, ref) { parent =>
       val inherited: Seq[(String, Long)] =
         if (truncate) Seq.empty
-        else snapNow match {
-          case Some(sn) => sn.files
-          // legacy manifest-less dir adopts its listing — minus this
-          // job's just-renamed files, which would otherwise double-count
-          case None => DocStore.listDataFiles(dir).filterNot { case (f, _) =>
-            newNames.contains(new Path(f).getName)
-          }
+        else if (parent.version > 0L) parent.files
+        // legacy manifest-less dir adopts its listing — minus this
+        // job's just-renamed files, which would otherwise double-count
+        else DocStore.listDataFiles(dir).filterNot { case (f, _) =>
+          newNames.contains(new Path(f).getName)
         }
       val liveNames = inherited.map { case (f, _) =>
         new Path(f).getName
@@ -3199,73 +3106,27 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
       // reserved — a new file reusing it would resurrect the old era's
       // bytes under the mapping (without per-column ids the name IS
       // the era). Loud, not silent remap.
-      val claimed = snapNow.map(_.colmaps).getOrElse(Map.empty)
       val reserved = schema.fieldNames.filter(n =>
-        claimed.get(n).exists(_ != n))
+        parent.colmaps.get(n).exists(_ != n))
       require(reserved.isEmpty,
         s"docstore: column(s) ${reserved.mkString(", ")} were renamed " +
           "or dropped; their physical names are reserved — write under " +
           "the current logical schema")
-      // CHECK constraints (r17 wave 2): every commit proves its OWN
-      // new files against the table's declared ranges from the stats
-      // their writers folded from the block headers — no file opened,
-      // no chunk decoded. Stats absent = no non-null values for the
-      // column = vacuously true (SQL CHECK semantics: NULL passes). A
-      // violation aborts the whole commit and cleans up — the table
-      // never holds a row the constraint forbids.
-      val activeChecks = snapNow.map(_.checks).getOrElse(Map.empty)
-      if (activeChecks.nonEmpty) {
-        val bad = for {
-          (c, (mn, mx)) <- activeChecks.toSeq
-          (n, st) <- newStats.toSeq.sortBy(_._1)
-          (lo, hi) <- st.cols.get(c).collect {
-            case DocStore.LongRange(a, b) if a < mn || b > mx => (a, b)
-            case DocStore.DoubleRange(a, b)
-                if a < mn.toDouble || b > mx.toDouble => (a, b)
-          }.toSeq
-        } yield s"$c in [$lo, $hi] outside [$mn, $mx] ($n)"
-        if (bad.nonEmpty) {
-          newFiles.foreach { case (f, _) => fs.delete(new Path(f), false) }
-          throw new IllegalArgumentException(
-            "docstore: CHECK constraint violation — " +
-              bad.take(3).mkString("; ") +
-              (if (bad.size > 3) "; …" else "") + "; commit aborted")
-        }
-      }
-      def abortConflict(msg: String): Nothing = {
-        // clean up our unreferenced outputs and abort loudly
-        newFiles.foreach { case (f, _) => fs.delete(new Path(f), false) }
-        throw new java.util.ConcurrentModificationException(
-          s"docstore: conflicting concurrent commit under $dir — " + msg +
-            "; rerun the operation against the new snapshot")
-      }
       val gone = replaceFiles -- liveNames
       if (gone.nonEmpty && !truncate)
         // a racing commit rewrote files this commit also rewrites
         abortConflict(s"${gone.size} file(s) this commit rewrites were " +
           s"already retired by another writer (${gone.take(3).mkString(", ")}" +
           s"${if (gone.size > 3) ", …" else ""})")
-      val dvNow = snapNow.map(_.dvs).getOrElse(Map.empty)
       // a deletion-vector commit landing after this rewrite's read
       // re-masked a file this commit replaces: the rewrite read the OLD
       // mask, so carrying on would silently drop those deletes
       // (ADVICE r15 — the mirror of deleteVectors' re-mask guard)
-      // manifests this conflict check needs may have been reclaimed by
-      // a concurrent vacuum (retention raced the commit): that is a
-      // CONSERVATIVE CONFLICT — abort-and-rerun against the new
-      // snapshot — not a "no snapshot version" assertion (ADVICE r16)
-      def orVacuumConflict[A](what: String)(body: => A): A =
-        try body
-        catch {
-          case e: DocStore.MissingSnapshotException =>
-            abortConflict(s"$what was vacuumed mid-commit " +
-              s"(${e.getMessage})")
-        }
       readVersion.foreach { rv =>
         val dvAtRead = orVacuumConflict(s"this commit's read version v$rv")(
-          DocStore.readDvMap(dir, rv, ref))
+          DocStore.readSnapshot(dir, rv, ref).dvs)
         val reMasked = replaceFiles
-          .filter(n => dvNow.get(n) != dvAtRead.get(n))
+          .filter(n => parent.dvs.get(n) != dvAtRead.get(n))
         if (reMasked.nonEmpty && !truncate)
           abortConflict(s"${reMasked.size} file(s) this commit rewrites " +
             "were re-masked by a concurrent deletion-vector commit " +
@@ -3275,8 +3136,8 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
       // commit since this writer's read declared a key domain on the
       // same column overlapping ours — the racing-MERGE-same-new-key
       // phantom that file-level disjointness cannot see. Per-version
-      // cost is ONE body read with no file-Bloom decode
-      // (readCommitKeyDomain). r17 (VERDICT r16 #5): a range overlap
+      // cost is ONE body read with no fold (commitMeta).
+      // r17 (VERDICT r16 #5): a range overlap
       // alone no longer convicts — when the intervening commit carried
       // a Bloom over its EXACT key set, this commit first tries to
       // PROVE disjointness (probe its own exact keys when it has them,
@@ -3284,9 +3145,9 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
       // sparse merges with interleaved-but-disjoint keys both land.
       // Bloom false positives abort conservatively — liveness only.
       for (kd <- keyDomain; rv <- readVersion;
-           w <- (rv + 1) to latest.getOrElse(0L);
+           w <- (rv + 1) to parent.version;
            other <- orVacuumConflict(s"intervening commit v$w")(
-             DocStore.readCommitKeyDomain(dir, w, ref))
+             DocStore.commitMeta(dir, w, ref).keyDomain)
            if other.col == kd.col && kd.min <= other.max &&
              kd.max >= other.min) {
         val provablyDisjoint = other.bloom.exists { b64 =>
@@ -3314,27 +3175,24 @@ class DocStoreBatchWrite(dir: String, schema: StructType, truncate: Boolean,
             s"this commit's [${kd.min},${kd.max}] (and key-set " +
             "disjointness could not be proven)")
       }
-      val base = inherited.filterNot { case (f, _) =>
-        replaceFiles.contains(new Path(f).getName)
-      }
-      // deletion vectors ride forward for inherited files; files this
-      // commit replaces lose theirs (the rewrite read them MASKED, so
-      // the new files already materialize the deletes), and new files
-      // never start with one
-      val dvs = dvNow.filterNot { case (n, _) => replaceFiles.contains(n) }
-      // Bloom indexes and partition tuples ride forward for inherited
-      // files (like DVs) and this job's files contribute theirs;
-      // replaced files drop theirs
-      val blooms = snapNow.map(_.blooms).getOrElse(Map.empty)
-        .filterNot { case ((n, _), _) => replaceFiles.contains(n) } ++
-        newBlooms
-      val parts = snapNow.map(_.parts).getOrElse(Map.empty)
-        .filterNot { case (n, _) => replaceFiles.contains(n) } ++ newParts
-      val v = latest.getOrElse(0L) + 1
-      committed = DocStore.writeManifest(dir, v, base ++ newFiles,
-        commitTs.getOrElse(System.currentTimeMillis()), dvs, keyDomain,
-        blooms, Some(schema.toDDL), base = snapNow, parts = parts,
-        ref = ref, op = Some(opName), stats = newStats)
+      // replaced files leave with their deletion vectors (the rewrite
+      // read them MASKED, so the new files already materialize the
+      // deletes), Blooms, tuples and stats; this job's files bring theirs
+      Some(parent.copy(
+        files = inherited.filterNot { case (f, _) =>
+          replaceFiles.contains(new Path(f).getName)
+        } ++ newFiles,
+        blooms = parent.blooms ++ newBlooms,
+        parts = parent.parts ++ newParts,
+        stats = parent.stats ++ newStats,
+        schemaDdl = Some(schema.toDDL)))
+    } catch {
+      // refused (conflict, CHECK, reserved name): this job's files are
+      // unreferenced — clean up and abort loudly
+      case e @ (_: IllegalArgumentException |
+                _: java.util.ConcurrentModificationException) =>
+        newFiles.foreach { case (f, _) => fs.delete(new Path(f), false) }
+        throw e
     }
   }
 

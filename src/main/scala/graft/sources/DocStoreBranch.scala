@@ -42,18 +42,15 @@ object DocStoreBranch {
     DocStore.requireBranchName(name)
     require(DocStore.branchVersions(dir, name).isEmpty,
       s"docstore: branch '$name' already exists under $dir")
-    val base = DocStore.latestVersion(dir).getOrElse(
+    val sn = DocStore.resolve(dir).getOrElse(
       throw new IllegalArgumentException(
         s"docstore: cannot branch an empty table (no commits under $dir)"))
-    val sn = DocStore.readSnapshot(dir, base)
-    val v = base + 1
+    val v = sn.version + 1
     // identical state ⇒ an empty delta body; the CAS failing means a
     // concurrent create won — loud, same-name branches cannot fork
     // two histories
-    val won = DocStore.writeManifest(dir, v, sn.files,
-      dvs = sn.dvs, blooms = sn.blooms, schemaDdl = sn.schemaDdl,
-      base = Some(sn), parts = sn.parts, ref = Some(name),
-      op = Some("branch-create"))
+    val won = DocStore.casVersion(dir, Some(name), sn, sn.copy(version = v),
+      DocStore.CommitMeta(Some("branch-create"), System.currentTimeMillis()))
     if (!won) throw new java.util.ConcurrentModificationException(
       s"docstore: branch '$name' was created concurrently under $dir")
     v
@@ -84,12 +81,10 @@ object DocStoreBranch {
     */
   def publish(dir: String, name: String,
               commitTs: Option[Long] = None): Long = {
-    val tip = DocStore.branchLatest(dir, name).getOrElse(
+    val branchSnap = DocStore.resolve(dir, None, Some(name)).getOrElse(
       throw new IllegalArgumentException(
         s"docstore: no such branch '$name' under $dir"))
-    val base = forkBase(dir, name)
-    val branchSnap = DocStore.readSnapshot(dir, tip, Some(name))
-    val baseSnap = DocStore.readSnapshot(dir, base)
+    val baseSnap = DocStore.readSnapshot(dir, forkBase(dir, name))
     def nameOf(f: String): String = new Path(f).getName
     val baseNames = baseSnap.files.map { case (f, _) => nameOf(f) }.toSet
     val branchByName = branchSnap.files.map { case (f, len) =>
@@ -102,12 +97,10 @@ object DocStoreBranch {
     val dvChangedKept = (branchSnap.dvs.keySet ++ baseSnap.dvs.keySet)
       .filter(branchNames.contains)
       .filter(n => branchSnap.dvs.get(n) != baseSnap.dvs.get(n))
-    var published = -1L
-    while (published < 0) {
-      val latest = DocStore.latestVersion(dir).getOrElse(
-        throw new IllegalStateException(
-          s"docstore: main chain vanished under $dir"))
-      val mainSnap = DocStore.readSnapshot(dir, latest)
+    DocStore.commit(dir, Some("publish"), commitTs,
+        branchSnap.keyDomain) { mainSnap =>
+      if (mainSnap.version == 0L) throw new IllegalStateException(
+        s"docstore: main chain vanished under $dir")
       val mainNames = mainSnap.files.map { case (f, _) => nameOf(f) }.toSet
       def conflict(msg: String): Nothing =
         throw new java.util.ConcurrentModificationException(
@@ -126,31 +119,20 @@ object DocStoreBranch {
         conflict(s"${reMasked.size} file(s) the branch touches were " +
           "re-masked by a main-side deletion-vector commit " +
           s"(${reMasked.take(3).mkString(", ")})")
-      val files = mainSnap.files.filterNot { case (f, _) =>
-        removed.contains(nameOf(f))
-      } ++ added.map { case (n, len) => (new Path(dir, n).toString, len) }
-      val liveNames = files.map { case (f, _) => nameOf(f) }.toSet
-      val dvs = (mainSnap.dvs -- removed) ++
-        dvChangedKept.flatMap(n => branchSnap.dvs.get(n).map(n -> _)) --
-        dvChangedKept.filterNot(branchSnap.dvs.contains)
-      val blooms = mainSnap.blooms.filterNot { case ((n, _), _) =>
-        removed.contains(n)
-      } ++ branchSnap.blooms.filter { case ((n, _), _) =>
-        liveNames.contains(n) && !baseNames.contains(n)
-      }
-      val parts = mainSnap.parts -- removed ++
-        branchSnap.parts.filter { case (n, _) =>
-          liveNames.contains(n) && !baseNames.contains(n)
-        }
-      val won = DocStore.writeManifest(dir, latest + 1, files,
-        commitTs.getOrElse(System.currentTimeMillis()), dvs,
-        branchSnap.keyDomain, blooms,
-        branchSnap.schemaDdl.orElse(mainSnap.schemaDdl),
-        base = Some(mainSnap), parts = parts, op = Some("publish"),
-        stats = branchSnap.stats)
-      if (won) published = latest + 1
-    }
-    published
+      // a file's Blooms, tuple and stats never change, so the union of
+      // both sides' serves every file that stays live
+      Some(mainSnap.copy(
+        files = mainSnap.files.filterNot { case (f, _) =>
+          removed.contains(nameOf(f))
+        } ++ added.map { case (n, len) => (new Path(dir, n).toString, len) },
+        dvs = mainSnap.dvs ++
+          dvChangedKept.flatMap(n => branchSnap.dvs.get(n).map(n -> _)) --
+          dvChangedKept.filterNot(branchSnap.dvs.contains),
+        blooms = mainSnap.blooms ++ branchSnap.blooms,
+        parts = mainSnap.parts ++ branchSnap.parts,
+        stats = mainSnap.stats ++ branchSnap.stats,
+        schemaDdl = branchSnap.schemaDdl.orElse(mainSnap.schemaDdl)))
+    }.get
   }
 
   /** Delete the branch's manifests (its data files stay until vacuum,

@@ -48,6 +48,13 @@ object DocStoreOps {
     */
   val MaxDriverKeys: Int = 256
 
+  private def noTable(dir: String): Nothing =
+    throw new IllegalStateException(s"docstore: no snapshot under $dir")
+
+  /** The latest snapshot of `dir`, loud when the table has none. */
+  private def current(dir: String): DocStore.Snapshot =
+    DocStore.resolve(dir).getOrElse(noTable(dir))
+
   /** The distinct non-null keys of `keys`, when it holds at most
     * [[MaxDriverKeys]] non-null key rows: ONE bounded collect, which a
     * local batch answers without a Spark job. None for a larger frame
@@ -159,9 +166,8 @@ object DocStoreOps {
     // reads plan from v0, and the commit declares readVersion=v0 so
     // the writer's conflict checks (file retirement, DV drift, key-
     // domain overlap) run against exactly what this merge saw
-    val v0 = DocStore.latestVersion(dir).getOrElse(
-      throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val sn = DocStore.readSnapshot(dir, v0)
+    val sn = current(dir)
+    val v0 = sn.version
     // a small batch's keys come to the driver once and decide the
     // affected files, the key domain and its Bloom — no Spark job
     val known = driverKeys(batch, key)
@@ -246,9 +252,8 @@ object DocStoreOps {
     */
   def delete(spark: SparkSession, dir: String, keys: DataFrame,
       key: String): Unit = {
-    val v0 = DocStore.latestVersion(dir).getOrElse(
-      throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val sn = DocStore.readSnapshot(dir, v0)
+    val sn = current(dir)
+    val v0 = sn.version
     val affected = affectedFiles(spark, sn, keys, key, driverKeys(keys, key))
     if (affected.isEmpty) return
     val tableCols = spark.read.format("docstore").load(dir).columns
@@ -285,9 +290,8 @@ object DocStoreOps {
     */
   def zorder(spark: SparkSession, dir: String, colX: String, colY: String,
       files: Int): Unit = {
-    val v = DocStore.latestVersion(dir).getOrElse(
-      throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val sn = DocStore.readSnapshot(dir, v)
+    val sn = current(dir)
+    val v = sn.version
     val all = sn.files.map { case (f, _) => new Path(f).getName }
     val df = spark.read.format("docstore")
       .option("snapshotVersion", v.toString).load(dir)
@@ -329,14 +333,14 @@ object DocStoreOps {
     */
   private[graft] def manifestDiff(dir: String, vFrom: Long,
       vTo: Long): (Set[String], Set[String]) = {
-    def names(v: Long): Set[String] =
-      DocStore.readManifest(dir, v).map { case (f, _) =>
-        new Path(f).getName
-      }.toSet
-    val f1 = names(vFrom)
-    val f2 = names(vTo)
-    val dv1 = DocStore.readDvMap(dir, vFrom)
-    val dv2 = DocStore.readDvMap(dir, vTo)
+    val s1 = DocStore.readSnapshot(dir, vFrom)
+    val s2 = DocStore.readSnapshot(dir, vTo)
+    def names(s: DocStore.Snapshot): Set[String] =
+      s.files.map { case (f, _) => new Path(f).getName }.toSet
+    val f1 = names(s1)
+    val f2 = names(s2)
+    val dv1 = s1.dvs
+    val dv2 = s2.dvs
     val reMasked = (f1 & f2).filter(n => dv1.get(n) != dv2.get(n))
     ((f1 -- f2) ++ reMasked, (f2 -- f1) ++ reMasked)
   }
@@ -406,14 +410,14 @@ object DocStoreOps {
     * of corpus size. Returns the new head version.
     */
   def restore(dir: String, toVersion: Long): Long = {
-    val sn = DocStore.readSnapshot(dir, toVersion) // loud if absent;
-    // files + restored masks + Bloom indexes + schema in one read
-    var v = DocStore.latestVersion(dir).getOrElse(0L) + 1
-    while (!DocStore.writeManifest(dir, v, sn.files, dvs = sn.dvs,
-        op = Some("restore"),
-        blooms = sn.blooms, schemaDdl = sn.schemaDdl, parts = sn.parts,
-        stats = sn.stats)) v += 1
-    v
+    val to = DocStore.readSnapshot(dir, toVersion) // loud if absent
+    // the files come back with their masks, Blooms, tuples and stats;
+    // column mappings, CHECK ranges and stream marks stay today's — so
+    // a re-added file must satisfy today's constraints
+    DocStore.commit(dir, Some("restore")) { sn =>
+      Some(sn.copy(files = to.files, dvs = to.dvs, blooms = to.blooms,
+        schemaDdl = to.schemaDdl, parts = to.parts, stats = to.stats))
+    }.get
   }
 
   /** Merge-on-read DELETE (Delta deletion vectors / Iceberg v2
@@ -438,9 +442,7 @@ object DocStoreOps {
     */
   def deleteVectors(spark: SparkSession, dir: String, keys: DataFrame,
       key: String): Unit = {
-    val v0 = DocStore.latestVersion(dir).getOrElse(
-      throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val sn0 = DocStore.readSnapshot(dir, v0)
+    val sn0 = current(dir)
     val affected = affectedFiles(spark, sn0, keys, key, driverKeys(keys, key))
     if (affected.isEmpty) return
     val dv0 = sn0.dvs
@@ -468,19 +470,12 @@ object DocStoreOps {
       (name, dvn)
     }.collect() // file-count-sized
     if (bindings.isEmpty) return
-    var committed = false
-    while (!committed) {
-      val latest = DocStore.latestVersion(dir).getOrElse(0L)
-      // one manifest read per attempt serves files + DVs + Blooms +
-      // schema (r16)
-      val sn = DocStore.readSnapshot(dir, latest)
-      val files = sn.files
-      val liveNames = files.map { case (f, _) =>
+    DocStore.commit(dir, Some("delete-dv")) { sn =>
+      val liveNames = sn.files.map { case (f, _) =>
         new Path(f).getName
       }.toSet
-      val dvNow = sn.dvs
       val conflict = bindings.filter { case (n, _) =>
-        !liveNames.contains(n) || dvNow.get(n) != dv0.get(n)
+        !liveNames.contains(n) || sn.dvs.get(n) != dv0.get(n)
       }
       if (conflict.nonEmpty)
         throw new java.util.ConcurrentModificationException(
@@ -489,12 +484,8 @@ object DocStoreOps {
             "or re-masked by another writer; rerun against the new " +
             "snapshot")
       // Bloom indexes stay valid under a mask (one-sided: they may
-      // report a deleted key present, never a live key absent);
-      // schema header carries forward (metadata-only commit)
-      committed = DocStore.writeManifest(dir, latest + 1, files,
-        dvs = dvNow ++ bindings.toMap,
-        blooms = sn.blooms, schemaDdl = sn.schemaDdl, base = Some(sn),
-        op = Some("delete-dv"))
+      // report a deleted key present, never a live key absent)
+      Some(sn.copy(dvs = sn.dvs ++ bindings))
     }
   }
 
@@ -505,8 +496,8 @@ object DocStoreOps {
     * make read-time subtraction more expensive than one rewrite.
     */
   def materializeDvs(spark: SparkSession, dir: String): Unit = {
-    val v = DocStore.latestVersion(dir).getOrElse(return)
-    val sn = DocStore.readSnapshot(dir, v)
+    val sn = DocStore.resolve(dir).getOrElse(return)
+    val v = sn.version
     val dvs = sn.dvs
     if (dvs.isEmpty) return
     val names = dvs.keys.toSeq.sorted
@@ -541,21 +532,17 @@ object DocStoreOps {
     * Returns the clone's first version (always 1).
     */
   def shallowClone(srcDir: String, dstDir: String): Long = {
-    val v = DocStore.latestVersion(srcDir).getOrElse(
-      throw new IllegalStateException(
-        s"docstore: no snapshot under $srcDir"))
+    val sn = current(srcDir)
     require(DocStore.latestVersion(dstDir).isEmpty,
       s"docstore: clone target $dstDir already has commits")
-    val sn = DocStore.readSnapshot(srcDir, v)
-    // DV sidecar references must survive the directory change too
+    // DV sidecar references must survive the directory change too;
+    // stream epoch marks belong to the source's queries
     val absDvs = sn.dvs.map { case (n, dv) =>
       n -> new Path(srcDir, dv).toString
     }
-    val won = DocStore.writeManifest(dstDir, 1L, sn.files,
-      dvs = absDvs, blooms = sn.blooms, schemaDdl = sn.schemaDdl,
-      parts = sn.parts, colmaps = sn.colmaps,
-      checks = sn.checks.map { case (c, r) => c -> Some(r) },
-      op = Some("clone"), stats = sn.stats)
+    val won = DocStore.casVersion(dstDir, None, DocStore.Snapshot(0L),
+      sn.copy(version = 1L, dvs = absDvs, streams = Map.empty),
+      DocStore.CommitMeta(Some("clone"), System.currentTimeMillis()))
     if (!won) throw new java.util.ConcurrentModificationException(
       s"docstore: clone target $dstDir was created concurrently")
     1L
@@ -607,9 +594,8 @@ object DocStoreOps {
       minMaskedRatio: Double): (Int, Int) = {
     require(minMaskedRatio >= 0.0 && minMaskedRatio <= 1.0,
       s"docstore: minMaskedRatio out of [0,1]: $minMaskedRatio")
-    val v = DocStore.latestVersion(dir).getOrElse(
-      throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val sn = DocStore.readSnapshot(dir, v)
+    val sn = current(dir)
+    val v = sn.version
     val dvs = sn.dvs
     if (dvs.isEmpty) return (0, 0)
     val byName = sn.files
@@ -645,9 +631,8 @@ object DocStoreOps {
     */
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long): (Int, Int) = {
-    val v = DocStore.latestVersion(dir).getOrElse(
-      throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-    val sn = DocStore.readSnapshot(dir, v)
+    val sn = current(dir)
+    val v = sn.version
     val files = sn.files
     val small = files.filter(_._2 < targetBytes)
     if (small.size <= 1) return (files.size, files.size)
@@ -666,9 +651,7 @@ object DocStoreOps {
       .option("readVersion", v.toString)
       .option("operation", "compact")
       .save(dir)
-    val after = DocStore.readManifest(dir,
-      DocStore.latestVersion(dir).get).size
-    (files.size, after)
+    (files.size, current(dir).files.size)
   }
 
   // ------------------- column mapping: RENAME/DROP without rewrite
@@ -707,11 +690,8 @@ object DocStoreOps {
   def renameColumn(dir: String, from: String, to: String): Long = {
     require(validIdent(from) && validIdent(to) && from != to,
       s"docstore: bad rename $from -> $to")
-    var committed = -1L
-    while (committed < 0) {
-      val v = DocStore.latestVersion(dir).getOrElse(
-        throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-      val sn = DocStore.readSnapshot(dir, v)
+    DocStore.commit(dir, Some("rename-column")) { sn =>
+      if (sn.version == 0L) noTable(dir)
       val logical = logicalFields(sn)
       require(logical.contains(from),
         s"docstore: no column '$from' to rename under $dir " +
@@ -721,21 +701,13 @@ object DocStoreOps {
       require(!sn.colmaps.contains(to),
         s"docstore: rename target '$to' is a reserved physical name " +
           "(a previous rename/drop claimed it)")
-      val updates = DocStore.physicalAliases(sn.colmaps, from)
-        .map(_ -> to).toMap
       // a CHECK constraint follows its column through the rename
-      val checkMoves: Map[String, Option[(Long, Long)]] =
-        sn.checks.get(from) match {
-          case Some(r) => Map(from -> None, to -> Some(r))
-          case None => Map.empty
-        }
-      if (DocStore.writeManifest(dir, v + 1, sn.files,
-        dvs = sn.dvs, blooms = sn.blooms, schemaDdl = sn.schemaDdl,
-        base = Some(sn), parts = sn.parts, colmaps = updates,
-        checks = checkMoves, op = Some("rename-column")))
-        committed = v + 1
-    }
-    committed
+      Some(sn.copy(
+        colmaps = sn.colmaps ++
+          DocStore.physicalAliases(sn.colmaps, from).map(_ -> to),
+        checks = sn.checks.get(from)
+          .fold(sn.checks)(r => sn.checks - from + (to -> r))))
+    }.get
   }
 
   /** DROP a column — a rename onto a version-stamped hidden name:
@@ -747,29 +719,20 @@ object DocStoreOps {
     */
   def dropColumn(dir: String, colName: String): Long = {
     require(validIdent(colName), s"docstore: bad column '$colName'")
-    var committed = -1L
-    while (committed < 0) {
-      val v = DocStore.latestVersion(dir).getOrElse(
-        throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-      val sn = DocStore.readSnapshot(dir, v)
+    DocStore.commit(dir, Some("drop-column")) { sn =>
+      if (sn.version == 0L) noTable(dir)
       val logical = logicalFields(sn)
       require(logical.contains(colName),
         s"docstore: no column '$colName' to drop under $dir")
       require(logical.size > 1,
         s"docstore: refusing to drop the last column '$colName'")
-      val hidden = s"${DocStore.DroppedPrefix}${colName}__v${v + 1}"
-      val updates = DocStore.physicalAliases(sn.colmaps, colName)
-        .map(_ -> hidden).toMap
+      val hidden = s"${DocStore.DroppedPrefix}${colName}__v${sn.version + 1}"
       // a dropped column takes its CHECK constraint with it
-      val checkDrops: Map[String, Option[(Long, Long)]] =
-        if (sn.checks.contains(colName)) Map(colName -> None) else Map.empty
-      if (DocStore.writeManifest(dir, v + 1, sn.files,
-        dvs = sn.dvs, blooms = sn.blooms, schemaDdl = sn.schemaDdl,
-        base = Some(sn), parts = sn.parts, colmaps = updates,
-        checks = checkDrops, op = Some("drop-column")))
-        committed = v + 1
-    }
-    committed
+      Some(sn.copy(
+        colmaps = sn.colmaps ++
+          DocStore.physicalAliases(sn.colmaps, colName).map(_ -> hidden),
+        checks = sn.checks - colName))
+    }.get
   }
 
   // ------------------------------ CHECK constraints (r17 wave 2)
@@ -789,53 +752,29 @@ object DocStoreOps {
     */
   def addCheck(dir: String, colName: String, min: Long, max: Long): Long = {
     require(min <= max, s"docstore: empty CHECK range [$min, $max]")
-    var committed = -1L
-    while (committed < 0) {
-      val v = DocStore.latestVersion(dir).getOrElse(
-        throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-      val sn = DocStore.readSnapshot(dir, v)
+    DocStore.commit(dir, Some("add-check")) { sn =>
+      if (sn.version == 0L) noTable(dir)
       require(logicalFields(sn).contains(colName),
         s"docstore: no column '$colName' to constrain under $dir")
-      val aliases = DocStore.physicalAliases(sn.colmaps, colName)
       val bad = sn.files.flatMap { case (f, _) =>
-        aliases.iterator.flatMap(a => DocStore.fileColumnStats(f, a))
-          .collectFirst {
-            case (a: Long, b: Long) if a < min || b > max =>
-              s"${new Path(f).getName} [$a, $b]"
-            case (a: Double, b: Double)
-                if a < min.toDouble || b > max.toDouble =>
-              s"${new Path(f).getName} [$a, $b]"
-          }
+        DocStore.rangeOutside(sn, f, colName, min, max).map { case (a, b) =>
+          s"${new Path(f).getName} [$a, $b]"
+        }
       }
       require(bad.isEmpty,
         s"docstore: existing data violates CHECK $colName in " +
           s"[$min, $max]: ${bad.take(3).mkString("; ")}" +
           (if (bad.size > 3) "; …" else ""))
-      if (DocStore.writeManifest(dir, v + 1, sn.files,
-        dvs = sn.dvs, blooms = sn.blooms, schemaDdl = sn.schemaDdl,
-        base = Some(sn), parts = sn.parts,
-        checks = Map(colName -> Some((min, max))),
-        op = Some("add-check")))
-        committed = v + 1
-    }
-    committed
+      Some(sn.copy(checks = sn.checks + (colName -> ((min, max)))))
+    }.get
   }
 
   /** Drop a declared constraint. Returns the committed version. */
-  def dropCheck(dir: String, colName: String): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val v = DocStore.latestVersion(dir).getOrElse(
-        throw new IllegalStateException(s"docstore: no snapshot under $dir"))
-      val sn = DocStore.readSnapshot(dir, v)
+  def dropCheck(dir: String, colName: String): Long =
+    DocStore.commit(dir, Some("drop-check")) { sn =>
+      if (sn.version == 0L) noTable(dir)
       require(sn.checks.contains(colName),
         s"docstore: no CHECK constraint on '$colName' under $dir")
-      if (DocStore.writeManifest(dir, v + 1, sn.files,
-        dvs = sn.dvs, blooms = sn.blooms, schemaDdl = sn.schemaDdl,
-        base = Some(sn), parts = sn.parts,
-        checks = Map(colName -> None), op = Some("drop-check")))
-        committed = v + 1
-    }
-    committed
-  }
+      Some(sn.copy(checks = sn.checks - colName))
+    }.get
 }

@@ -78,7 +78,7 @@ class DocStoreBloomSpec extends AnyFunSuite {
     DocStoreOps.merge(spark, dir, batch, "k")
     DocStoreOps.compact(spark, dir, 1L << 20)
     val v = DocStore.latestVersion(dir).get
-    val blooms = DocStore.readBloomMap(dir, v)
+    val blooms = DocStore.readSnapshot(dir, v).blooms
     assert(blooms.nonEmpty && blooms.keys.forall(_._2 == "k"),
       "rewrites must carry the Bloom index forward on their own output")
     // post-rewrite: the index still answers exactly
@@ -87,7 +87,7 @@ class DocStoreBloomSpec extends AnyFunSuite {
     assert(got.length == 1 && got(0).getString(1) == "9")
     // every manifest-listed file has a binding (full coverage after
     // compact collapses to few files)
-    val names = DocStore.readManifest(dir, v)
+    val names = DocStore.readSnapshot(dir, v).files
       .map { case (f, _) => new org.apache.hadoop.fs.Path(f).getName }.toSet
     assert(blooms.keys.map(_._1).toSet == names,
       "every live file must carry its Bloom after the rewrite chain")

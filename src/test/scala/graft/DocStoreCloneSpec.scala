@@ -80,7 +80,7 @@ class DocStoreCloneSpec extends AnyFunSuite {
     assert(srcMap(5L) == 15L && !srcMap.contains(100L), "source unchanged")
     // the rewritten reference is gone: every remaining external ref
     // resolves outside dst, every local file inside
-    val files = DocStore.readManifest(dst, DocStore.latestVersion(dst).get)
+    val files = DocStore.readSnapshot(dst, DocStore.latestVersion(dst).get).files
     assert(files.exists(f => !f._1.startsWith(dst)), "still some refs")
     assert(files.exists(f => f._1.startsWith(dst)), "local divergence files")
   }

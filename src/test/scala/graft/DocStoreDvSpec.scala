@@ -46,7 +46,7 @@ class DocStoreDvSpec extends AnyFunSuite {
   }
 
   private def manifestSet(dir: String): Set[(String, Long)] =
-    DocStore.readManifest(dir, DocStore.latestVersion(dir).get)
+    DocStore.readSnapshot(dir, DocStore.latestVersion(dir).get).files
       .map { case (f, len) => (new Path(f).getName, len) }.toSet
 
   test("DV delete writes zero data files; masked read; pinned read intact") {
@@ -59,7 +59,7 @@ class DocStoreDvSpec extends AnyFunSuite {
     assert(v2 == v1 + 1)
     assert(manifestSet(dir) == before,
       "a DV delete must not add, remove, or rewrite any data file")
-    assert(DocStore.readDvMap(dir, v2).nonEmpty, "no #dv bindings committed")
+    assert(DocStore.readSnapshot(dir, v2).dvs.nonEmpty, "no #dv bindings committed")
     val got = spark.read.format("docstore").load(dir)
       .select("k").collect().map(_.getLong(0)).toSet
     assert(got == (0L until 400L).toSet -- Set(3L, 77L, 250L, 399L))
@@ -75,7 +75,7 @@ class DocStoreDvSpec extends AnyFunSuite {
     DocStoreOps.deleteVectors(spark, dir, keysDf(Seq(10L, 20L)), "k")
     DocStoreOps.deleteVectors(spark, dir, keysDf(Seq(20L, 30L)), "k")
     val v = DocStore.latestVersion(dir).get
-    val dvMap = DocStore.readDvMap(dir, v)
+    val dvMap = DocStore.readSnapshot(dir, v).dvs
     // 10/20/30 land in the first of four range files: ONE binding
     assert(dvMap.size == 1, s"expected one binding, got $dvMap")
     val merged = DocStore.readDv(new Path(dir, dvMap.values.head).toString)
@@ -89,7 +89,7 @@ class DocStoreDvSpec extends AnyFunSuite {
     }
     DocStoreOps.materializeDvs(spark, dir)
     val vAfter = DocStore.latestVersion(dir).get
-    assert(DocStore.readDvMap(dir, vAfter).isEmpty,
+    assert(DocStore.readSnapshot(dir, vAfter).dvs.isEmpty,
       "materialize must drop every #dv binding")
     val after = manifestSet(dir)
     assert(untouched.subsetOf(after),
@@ -116,7 +116,7 @@ class DocStoreDvSpec extends AnyFunSuite {
     val vMasked = DocStore.latestVersion(dir).get
     DocStoreOps.materializeDvs(spark, dir)
     val vNew = DocStoreOps.restore(dir, vMasked)
-    assert(DocStore.readDvMap(dir, vNew).nonEmpty,
+    assert(DocStore.readSnapshot(dir, vNew).dvs.nonEmpty,
       "restore must carry the restored snapshot's #dv bindings")
     assert(spark.read.format("docstore").load(dir).count() == 99L)
   }

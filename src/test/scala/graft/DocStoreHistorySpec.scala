@@ -66,8 +66,7 @@ class DocStoreHistorySpec extends AnyFunSuite {
       .option("operation", "bootstrap").save(dir) // v1
     // a manifest written without an op (the pre-r17c body shape)
     val sn = DocStore.readSnapshot(dir, 1L)
-    assert(DocStore.writeManifest(dir, 2L, sn.files, dvs = sn.dvs,
-      blooms = sn.blooms, schemaDdl = sn.schemaDdl, base = Some(sn)))
+    assert(DocStore.commit(dir, None)(_ => Some(sn)).contains(2L))
     // branch manifests live in the branch namespace — main history
     // sees only the publish fold
     graft.sources.DocStoreBranch.create(dir, "audit")

@@ -62,7 +62,7 @@ class DocStoreOccSoakSpec extends AnyFunSuite {
     val wins = new java.util.concurrent.atomic.AtomicInteger(0)
     val outcomes = race(16) { i =>
       // every thread writes ITS OWN body then races the same final name
-      // — bypassing writeManifest's fast-path pre-check so the publish
+      // — bypassing casVersion's fast-path pre-check so the publish
       // primitive itself is what's under test
       val tmpP = new org.apache.hadoop.fs.Path(dir, s"_manifest-v00000001.tmp-$i")
       val out = fs.create(tmpP, false)

@@ -39,7 +39,7 @@ class DocStorePurgeSpec extends AnyFunSuite {
 
   private def dvCount(dir: String): Int = {
     val v = DocStore.latestVersion(dir).get
-    DocStore.readDvMap(dir, v).size
+    DocStore.readSnapshot(dir, v).dvs.size
   }
 
   test("only files at/above the ratio are purged; the logical view " +
@@ -54,20 +54,20 @@ class DocStorePurgeSpec extends AnyFunSuite {
       .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
     assert(before.length == 29)
     assert(dvCount(dir) == 2)
-    val filesBefore = DocStore.readManifest(dir,
-      DocStore.latestVersion(dir).get).size
+    val filesBefore = DocStore.readSnapshot(dir,
+      DocStore.latestVersion(dir).get).files.size
     val (masked, purged) = DocStoreOps.purgeDvs(spark, dir, 0.3)
     assert((masked, purged) == (2, 1), "one heavy file of two masked")
     assert(dvCount(dir) == 1, "the light file keeps its DV")
     val v = DocStore.latestVersion(dir).get
-    assert(DocStore.readManifest(dir, v).size == filesBefore,
+    assert(DocStore.readSnapshot(dir, v).files.size == filesBefore,
       "one heavy file retired, one survivors-only file added")
     val after = spark.read.format("docstore").load(dir)
       .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
     assert(after == before, "purge is physically visible, logically inert")
     // the remaining DV binds to the k=1 file
     val parts = DocStore.readSnapshot(dir, v).parts
-    val dvFiles = DocStore.readDvMap(dir, v).keys.toSeq
+    val dvFiles = DocStore.readSnapshot(dir, v).dvs.keys.toSeq
     assert(dvFiles.forall(n =>
       parts.get(n).exists(_.contains(("k", Some("1")))) ))
   }

@@ -229,8 +229,8 @@ class DocStoreSpec extends AnyFunSuite {
       .coalesce(1).write.format("docstore").mode("overwrite").save(dir)
     sources.DocStoreOps.delete(spark, dir,
       spark.range(50).select(col("id").as("k")), "k")
-    assert(DocStore.readManifest(dir,
-      DocStore.latestVersion(dir).get).isEmpty, "all files retired")
+    assert(DocStore.readSnapshot(dir,
+      DocStore.latestVersion(dir).get).files.isEmpty, "all files retired")
     val df = spark.read.format("docstore").load(dir)
     assert(df.schema.fieldNames.toSeq === Seq("k", "v"))
     assert(df.count() === 0L)
@@ -251,7 +251,7 @@ class DocStoreSpec extends AnyFunSuite {
   }
 
   private def manifestNames(dir: String): Set[String] =
-    DocStore.readManifest(dir, DocStore.latestVersion(dir).get)
+    DocStore.readSnapshot(dir, DocStore.latestVersion(dir).get).files
       .map { case (f, _) => new org.apache.hadoop.fs.Path(f).getName }.toSet
 
   test("merge: copy-on-write rewrites only key-range-affected files; " +
@@ -360,7 +360,7 @@ class DocStoreSpec extends AnyFunSuite {
     // base range files minus the ones the merge/delete rewrote
     val (removed, added) = sources.DocStoreOps.manifestDiff(dir, v1, v3)
     val unchanged = manifestNames(dir) &
-      DocStore.readManifest(dir, v1)
+      DocStore.readSnapshot(dir, v1).files
         .map { case (f, _) => new org.apache.hadoop.fs.Path(f).getName }.toSet
     assert(unchanged.nonEmpty, "some base file must survive untouched")
     assert((removed & unchanged).isEmpty && (added & unchanged).isEmpty)
@@ -529,7 +529,7 @@ class DocStoreSpec extends AnyFunSuite {
     val delKeys = spark.range(4000, 4096).select(col("id").as("k"))
     // the delete commits inside the merge-commit's CAS window: the
     // merge reads latest=v_base, the delete publishes v_base+1 under
-    // it, the merge's writeManifest(v_base+1) LOSES, and the retry
+    // it, the merge's casVersion(v_base+1) LOSES, and the retry
     // rebases onto the delete's manifest
     DocStore.commitRaceHook = Some(() =>
       sources.DocStoreOps.delete(spark, dir, delKeys, "k"))
@@ -582,7 +582,7 @@ class DocStoreSpec extends AnyFunSuite {
     // legitimately stays for pinned readers until vacuum) — nothing
     // from the loser's aborted rewrite remains
     val referenced = DocStore.manifestVersions(dir).flatMap { v =>
-      DocStore.readManifest(dir, v).map { case (f, _) =>
+      DocStore.readSnapshot(dir, v).files.map { case (f, _) =>
         new org.apache.hadoop.fs.Path(f).getName
       }
     }.toSet
@@ -713,7 +713,7 @@ class DocStoreSpec extends AnyFunSuite {
     assert(DocStore.listDataFiles(dir).map(_._1).toSet === filesBefore,
       "restore is metadata-only: no data file created or deleted")
     assert(manifestNames(dir) ===
-      DocStore.readManifest(dir, v1).map { case (f, _) =>
+      DocStore.readSnapshot(dir, v1).files.map { case (f, _) =>
         new org.apache.hadoop.fs.Path(f).getName
       }.toSet, "head manifest equals the restored snapshot's file list")
     // head reads the pre-merge state
